@@ -328,14 +328,14 @@ def closure_correct(
         return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
     if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
         from .spanfill import dense_span_kernel
 
-        def batch_fn(keys, grids, series):
-            return rows_from(keys, correct_span_batch([v[:max_epochs] for v in series]))
+        def batch_fn(keys, grids, values, observed):
+            return rows_from(keys, correct_span_batch([v[:max_epochs] for v in values[0]]))
 
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, schema)
+        return dense_span_kernel(
+            rollup, tier, [(value_col, "double", 0.0)], batch_fn, schema, fill=fill
+        )
 
     with_span = with_span_bucket(
         rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")

@@ -42,23 +42,23 @@ def compress_rollup(
     encoder, which is also where they compress best.
     """
     if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
         from .spanfill import dense_span_kernel
 
-        def batch_fn(keys, grids, series):
+        def batch_fn(keys, grids, values, observed):
             return pd.DataFrame(
                 {
                     "source": [k[0] for k in keys],
                     "span_s": [k[1] for k in keys],
                     "n_points": [len(g) for g in grids],
                     "ts_blob": encode_dod_many(grids),
-                    "val_blob": encode_xor_many(series),
+                    "val_blob": encode_xor_many(values[0]),
                 },
                 columns=["source", "span_s", "n_points", "ts_blob", "val_blob"],
             )
 
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, CHUNK_SCHEMA)
+        return dense_span_kernel(
+            rollup, tier, [(value_col, "double", 0.0)], batch_fn, CHUNK_SCHEMA, fill=fill
+        )
 
     with_span = with_span_bucket(
         rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")

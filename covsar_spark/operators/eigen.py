@@ -258,16 +258,14 @@ def eigen_rollup(
         )
 
     if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
         from .spanfill import dense_span_kernel
 
-        def batch_fn(keys, grids, series):
-            return rows_from(
-                [(s, sp, len(v)) for (s, sp), v in zip(keys, series)], series
-            )
+        def batch_fn(keys, grids, values, observed):
+            return rows_from([(s, sp, len(g)) for (s, sp), g in zip(keys, grids)], values[0])
 
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, EIGEN_SCHEMA)
+        return dense_span_kernel(
+            rollup, tier, [(value_col, "double", 0.0)], batch_fn, EIGEN_SCHEMA, fill=fill
+        )
 
     with_span = with_span_bucket(
         rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")

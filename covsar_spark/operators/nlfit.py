@@ -128,14 +128,14 @@ def nlfit_rollup(
     (operators/spanfill; output-identical, tests/test_spanfill.py).
     """
     if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
         from .spanfill import dense_span_kernel
 
-        def batch_fn(keys, grids, series):
-            return _nlfit_rows(keys, [v[:max_epochs] for v in series])
+        def batch_fn(keys, grids, values, observed):
+            return _nlfit_rows(keys, [v[:max_epochs] for v in values[0]])
 
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, NLFIT_SCHEMA)
+        return dense_span_kernel(
+            rollup, tier, [(value_col, "double", 0.0)], batch_fn, NLFIT_SCHEMA, fill=fill
+        )
 
     with_span = with_span_bucket(
         rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")

@@ -1,34 +1,38 @@
-"""Zero-fill INSIDE the span kernels — shared single-shuffle prep.
+"""The span-kernel skeleton: zero-fill INSIDE the kernel, one shuffle.
 
-The relational path the span kernels (closure correction, eigen, nonlinear
-fit, chunk compression) consumed until r9 was::
+Every per-(source, span) kernel — the tier kernel (eigen + codecs + dense
+points), closure correction, eigen, nonlinear fit, chunk compression —
+runs on this one skeleton instead of the relational chain::
 
     gapfill(rollup, tier, "zero")  ->  with_span_bucket  ->  applyInPandas
 
 which materializes the DENSE per-source calendar grid (a grid join + its
 exchange) and then shuffles every dense row — at sf0.1 the 100k-row events
-rollup explodes to a 2.1M-row dense grid (21x) before the kernel shuffle,
-and at a telemetry-sparse 100 TB the amplification is whatever the gap
-fraction makes it. This module moves the zero-fill INSIDE the kernel, the
-same sentinel construction `tier_kernel` already proved bit-identical to
-the relational gapfill (tests/test_tier_kernel.py): sentinels (one row per
-(source, span) carrying the source's [lo, hi] grid bounds) UNION the
-OBSERVED rollup rows, ONE repartition on (source, span), sort within
-partitions, and a mapInPandas carry loop that reindexes each span to its
-dense grid in numpy. Only observed rows + one sentinel per span ever
-shuffle (guide §8: move small rows, manufacture the dense form where it is
-consumed).
+rollup explodes to a 2.1M-row dense grid (21x) before the kernel shuffle.
+Here only observed rows + one sentinel per span shuffle (move small rows,
+manufacture the dense form where it is consumed):
 
-Equality obligations (pinned in tests/test_spanfill.py): for every kernel,
-`op(gapfill(roll, tier, "zero"), ...)` == `op(roll, ..., fill="zero")`
-EXACTLY — same grid (the per-source [lo, hi] lattice clipped to each
-span), same series values (observed verbatim, gaps 0.0), same epoch order,
-same caps.
+- `sentinel_union_prep`: sentinels (one row per (source, span) carrying the
+  source's [lo, hi] grid bounds) UNION the observed rollup rows, ONE
+  repartition on (source, span), sorted so each span group arrives
+  contiguous with its sentinel first.
+- `span_batches`: the carry loop — a span group split across Arrow batch
+  boundaries is carried whole into the next batch.
+- `fill_span`: one span's dense reindex (observed values verbatim, each
+  payload column's own gap value elsewhere, plus the observed mask).
+- `fill_groups` / `dense_span_kernel`: the column-major batch handed to a
+  caller's ``batch_fn`` inside one mapInPandas.
+
+Equality obligations: for every kernel, `op(gapfill(roll, tier, "zero"),
+...)` == `op(roll, ..., fill="zero")` EXACTLY — same grid (the per-source
+[lo, hi] lattice clipped to each span), same series values, same epoch
+order (tests/test_spanfill.py, tests/test_tier_kernel.py); the carry loop
+is batch-boundary invariant (tests/test_properties.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -37,18 +41,21 @@ from pyspark.sql import functions as F
 
 from ..schemas import EIGEN_SPAN, TIERS
 
+# one payload column: (rollup column, Spark type it rides as, gap value).
+# The gap value also fixes the dense array's dtype: 0 -> int64, 0.0/NaN ->
+# float64.
+Payload = Sequence[tuple[str, str, object]]
+
 
 def sentinel_union_prep(
-    rollup: DataFrame, tier: str, value_col: str, span: int | None = None
+    rollup: DataFrame, tier: str, payload: Payload
 ) -> tuple[DataFrame, int, int]:
     """(prep frame, tier_s, span): sentinels ∪ observed rows, repartitioned
     on (source, span_s) and sorted (source, span_s, is_sentinel DESC,
-    epoch_s) so each span group arrives contiguous with its sentinel first
-    — the exact tier_kernel prep, with a single ``val`` payload column."""
+    epoch_s) so each span group arrives contiguous with its sentinel first."""
     tier_s = TIERS[tier]
-    span = span or EIGEN_SPAN[tier]
-    sess = rollup.sparkSession
-    n_part = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
+    span = EIGEN_SPAN[tier]
+    n_part = int(rollup.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
     bounds = rollup.groupBy("source").agg(
         F.min("epoch_s").alias("lo"), F.max("epoch_s").alias("hi")
@@ -64,10 +71,10 @@ def sentinel_union_prep(
         "source",
         "span_s",
         F.lit(True).alias("is_sentinel"),
-        F.col("span_s").alias("epoch_s"),
+        F.col("span_s").alias("epoch_s"),  # sorts before any data via is_sentinel
         "lo",
         "hi",
-        F.lit(None).cast("double").alias("val"),
+        *(F.lit(None).cast(t).alias(c) for c, t, _ in payload),
     )
     data = rollup.select(
         "source",
@@ -76,7 +83,7 @@ def sentinel_union_prep(
         "epoch_s",
         F.lit(None).cast("long").alias("lo"),
         F.lit(None).cast("long").alias("hi"),
-        F.col(value_col).cast("double").alias("val"),
+        *(F.col(c).cast(t).alias(c) for c, t, _ in payload),
     )
     prep = (
         sentinels.unionByName(data)
@@ -86,88 +93,101 @@ def sentinel_union_prep(
     return prep, tier_s, span
 
 
+def span_batches(frames: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The carry loop over a (source, span_s)-sorted frame stream: yields
+    frames of COMPLETE span groups only, holding the trailing (possibly
+    split) group back until the next frame or the end of the stream."""
+    carry: pd.DataFrame | None = None
+    for pdf in frames:
+        if carry is not None and len(carry):
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if len(pdf) == 0:
+            continue
+        src = pdf["source"].to_numpy()
+        spn = pdf["span_s"].to_numpy()
+        diff = (spn != spn[-1]) | (src != src[-1])
+        last_start = int(np.flatnonzero(diff)[-1] + 1) if diff.any() else 0
+        carry = pdf.iloc[last_start:]
+        if last_start:
+            yield pdf.iloc[:last_start]
+    if carry is not None and len(carry):
+        yield carry
+
+
+def fill_span(
+    grid: np.ndarray,
+    tier_s: int,
+    epochs: np.ndarray,
+    values: Sequence[np.ndarray],
+    payload: Payload,
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """Scatter one span's observed rows onto its dense ``grid``: returns one
+    dense array per payload column (observed values verbatim, the column's
+    gap value elsewhere) and the observed mask."""
+    dense = [np.full(len(grid), gap) for _, _, gap in payload]
+    observed = np.zeros(len(grid), dtype=bool)
+    if len(epochs):
+        idx = (epochs - grid[0]) // tier_s
+        for d, v in zip(dense, values):
+            d[idx] = v
+        observed[idx] = True
+    return dense, observed
+
+
 def fill_groups(
-    pdf: pd.DataFrame, tier_s: int, span: int
-) -> Iterator[tuple[str, int, np.ndarray, np.ndarray]]:
-    """Yield (source, span_s, grid, zero-filled series) per span group of a
-    contiguous prep frame — the val-only twin of tier_kernel._process's
-    reindex (observed values verbatim, gaps 0.0, grid = the source's
-    [lo, hi] lattice clipped to the span)."""
+    pdf: pd.DataFrame, tier_s: int, span: int, payload: Payload
+) -> tuple[list, list[np.ndarray], list[list[np.ndarray]], list[np.ndarray]]:
+    """A prep frame of complete span groups -> (keys, grids, values,
+    observed): keys are (source, span_s), grids the source's [lo, hi]
+    lattice clipped to each span, ``values[j][i]`` payload column j's
+    dense series for span i."""
     src = pdf["source"].to_numpy()
     spn = pdf["span_s"].to_numpy(np.int64)
     sentinel = pdf["is_sentinel"].to_numpy(bool)
     eps = pdf["epoch_s"].to_numpy(np.int64)
     lo = pdf["lo"].to_numpy()
     hi = pdf["hi"].to_numpy()
-    val = pdf["val"].to_numpy(np.float64)
+    cols = [pdf[c].to_numpy() for c, _, _ in payload]
 
     change = (spn[1:] != spn[:-1]) | (src[1:] != src[:-1])
     starts = np.concatenate([[0], np.flatnonzero(change) + 1, [len(spn)]])
+    keys, grids, observed = [], [], []
+    values: list[list[np.ndarray]] = [[] for _ in payload]
     for a, b in zip(starts[:-1], starts[1:]):
-        s_lo, s_hi = int(lo[a]), int(hi[a])
         sp = int(spn[a])
-        g0 = max(sp, s_lo)
-        g1 = min(sp + span, s_hi + tier_s)
+        g0 = max(sp, int(lo[a]))
+        g1 = min(sp + span, int(hi[a]) + tier_s)
         grid = np.arange(g0, g1, tier_s, dtype=np.int64)
-        v = np.zeros(len(grid), dtype=np.float64)
         d0 = a + (1 if sentinel[a] else 0)
-        if b > d0:
-            v[(eps[d0:b] - g0) // tier_s] = val[d0:b]
-        yield src[a], sp, grid, v
-
-
-def map_span_groups(
-    prep: DataFrame,
-    tier_s: int,
-    span: int,
-    process: Callable[[pd.DataFrame], pd.DataFrame],
-    schema,
-) -> DataFrame:
-    """mapInPandas over the prep stream with the tier_kernel carry loop:
-    a span group split across Arrow batch boundaries is carried whole into
-    the next batch, so ``process`` always sees complete span groups."""
-
-    def kernel(it):
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            src = pdf["source"].to_numpy()
-            spn = pdf["span_s"].to_numpy()
-            diff = (spn != spn[-1]) | (src != src[-1])
-            last_start = int(np.flatnonzero(diff)[-1] + 1) if diff.any() else 0
-            carry = pdf.iloc[last_start:]
-            head = pdf.iloc[:last_start]
-            if len(head):
-                yield process(head)
-        if carry is not None and len(carry):
-            yield process(carry)
-
-    return prep.mapInPandas(kernel, schema)
+        dense, obs = fill_span(grid, tier_s, eps[d0:b], [c[d0:b] for c in cols], payload)
+        keys.append((src[a], sp))
+        grids.append(grid)
+        observed.append(obs)
+        for out, d in zip(values, dense):
+            out.append(d)
+    return keys, grids, values, observed
 
 
 def dense_span_kernel(
     rollup: DataFrame,
     tier: str,
-    value_col: str,
-    batch_fn: Callable[[list, list[np.ndarray], list[np.ndarray]], pd.DataFrame],
+    payload: Payload,
+    batch_fn: Callable[..., pd.DataFrame],
     schema,
-    span: int | None = None,
+    fill: str = "zero",
 ) -> DataFrame:
-    """One-shuffle zero-filled span kernel: ``batch_fn(keys, grids, series)``
-    receives every complete span group of a batch — keys as (source,
-    span_s) tuples, grids/series as the dense per-span arrays — and returns
-    the output rows as a pandas frame matching ``schema``."""
-    prep, tier_s, span = sentinel_union_prep(rollup, tier, value_col, span)
+    """One-shuffle zero-filled span kernel: ``batch_fn(keys, grids, values,
+    observed)`` receives every complete span group of a batch (see
+    `fill_groups`) and returns the output rows as a pandas frame matching
+    ``schema``. Only the zero policy is kernel-fillable: ffill/linear need
+    cross-span continuity per source, which a span-partitioned kernel
+    cannot see (those use operators/gapfill.py)."""
+    if fill != "zero":
+        raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
+    prep, tier_s, span = sentinel_union_prep(rollup, tier, payload)
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, grids, series = [], [], []
-        for s, sp, grid, v in fill_groups(pdf, tier_s, span):
-            keys.append((s, sp))
-            grids.append(grid)
-            series.append(v)
-        return batch_fn(keys, grids, series)
+    def kernel(frames):
+        for pdf in span_batches(frames):
+            yield batch_fn(*fill_groups(pdf, tier_s, span, payload))
 
-    return map_span_groups(prep, tier_s, span, process, schema)
+    return prep.mapInPandas(kernel, schema)

@@ -3,19 +3,14 @@
 The relational tier pipeline costs three exchanges per tier: the gap-fill
 grid join, plus the kernel shuffle, and re-materializes the dense grid
 through a sort-merge join. This operator collapses gap-fill + eigen + codec
-into ONE exchange:
-
-    sentinels (one row per (source, span) in the source's range, carrying
-    the per-source [lo, hi] grid bounds)
-      UNION data rows
-      -> repartition(source, span) -> sortWithinPartitions -> mapInPandas
-
-The kernel reindexes each span to its dense tier grid in numpy (zero-fill,
-`filled` lineage), then runs the batched eigh + segmented Gorilla/DoD encode,
-emitting span rows that carry the filled points as an array column — the
-dense tier table is recovered JVM-side with one `explode`, no further
-shuffle. Sentinels guarantee even fully-empty spans (a gap wider than a whole
-span) are emitted.
+into ONE exchange: it is a ``batch_fn`` over the span-kernel skeleton
+(operators/spanfill.py — sentinels ∪ rows -> repartition(source, span) ->
+sorted mapInPandas carry loop -> dense reindex) carrying the five rollup
+columns, then runs the batched eigh + segmented Gorilla/DoD encode, emitting
+span rows that carry the filled points as array columns — the dense tier
+table is recovered JVM-side with one `explode`, no further shuffle.
+Sentinels guarantee even fully-empty spans (a gap wider than a whole span)
+are emitted.
 
 ONLY valid for the `zero` fill policy: ffill/linear need cross-span
 continuity per source, which a span-partitioned kernel cannot see — those
@@ -24,6 +19,8 @@ use the relational `operators/gapfill.py` path.
 Exactness: output rows must equal the relational gapfill + eigen_rollup +
 compress_rollup results bit-for-bit (tests/test_tier_kernel.py); the series
 fed to eigh is the same canonical zero-filled, epoch-sorted grid.
+`tier_rows` is also the streamed span finalizer's kernel
+(streaming/span_stream.py).
 """
 
 from __future__ import annotations
@@ -34,9 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import EIGEN_P, EIGEN_SPAN, TIERS
+from ..schemas import EIGEN_P
 from .codecs import encode_dod_many, encode_xor_many
 from .eigen import lagcov_eig_batch
+from .spanfill import dense_span_kernel
 
 # filled points ride as parallel array columns (one numpy array per span row)
 # — zero per-point Python; the dense tier table is arrays_zip+explode'd back
@@ -61,94 +59,44 @@ TIER_SCHEMA = T.StructType(
         T.StructField("p_filled", T.ArrayType(T.BooleanType(), False), False),
     ]
 )
+TIER_SCHEMA_META = T.StructType([f for f in TIER_SCHEMA.fields if not f.name.startswith("p_")])
 
-
-_META_COLS = [
-    "source", "span_s", "n_epochs", "lam", "tc", "eig", "n_points", "ts_blob", "val_blob"
+# zero-filled epochs carry rate 0; observed epochs carry the INPUT rollup's
+# rate column verbatim (not a tok/tier_s recompute, which would silently
+# diverge for rollups whose rate is e.g. pre-rounded)
+TIER_PAYLOAD = [
+    ("token_count", "long", 0),
+    ("n_docs", "long", 0),
+    ("max_tok", "int", np.nan),
+    ("min_tok", "int", np.nan),
+    ("rate", "double", 0.0),
 ]
-TIER_SCHEMA_META = T.StructType([f for f in TIER_SCHEMA.fields if f.name in _META_COLS])
 
 
-def _process(pdf: pd.DataFrame, tier_s: int, span: int, p: int) -> pd.DataFrame:
-    src = pdf["source"].to_numpy()
-    spn = pdf["span_s"].to_numpy(np.int64)
-    sentinel = pdf["is_sentinel"].to_numpy(bool)
-    eps = pdf["epoch_s"].to_numpy(np.int64)
-    lo = pdf["lo"].to_numpy()
-    hi = pdf["hi"].to_numpy()
-    tc_ = pdf["token_count"].to_numpy()
-    nd_ = pdf["n_docs"].to_numpy()
-    mx_ = pdf["max_tok"].to_numpy()
-    mn_ = pdf["min_tok"].to_numpy()
-    rt_ = pdf["rate"].to_numpy()
-
-    change = (spn[1:] != spn[:-1]) | (src[1:] != src[:-1])
-    starts = np.concatenate([[0], np.flatnonzero(change) + 1, [len(spn)]])
-
-    out_src, out_spn, rows_meta = [], [], []
-    series, ts_list, cv_list = [], [], []
-    p_tok, p_docs, p_max, p_min, p_filled = [], [], [], [], []
-    for a, b in zip(starts[:-1], starts[1:]):
-        # sentinel sorts first within the span (is_sentinel desc in sort key)
-        s_lo, s_hi = int(lo[a]), int(hi[a])
-        sp = int(spn[a])
-        g0 = max(sp, s_lo)
-        g1 = min(sp + span, s_hi + tier_s)
-        grid = np.arange(g0, g1, tier_s, dtype=np.int64)
-        k = len(grid)
-        tok = np.zeros(k, dtype=np.int64)
-        ndc = np.zeros(k, dtype=np.int64)
-        mxv = np.full(k, np.nan)
-        mnv = np.full(k, np.nan)
-        filled = np.ones(k, dtype=bool)
-        # zero-filled epochs carry rate 0; observed epochs carry the INPUT
-        # rollup's rate column verbatim (not a tok/tier_s recompute, which
-        # would silently diverge for rollups whose rate is e.g. pre-rounded)
-        rate = np.zeros(k, dtype=np.float64)
-        d0 = a + (1 if sentinel[a] else 0)
-        if b > d0:
-            idx = (eps[d0:b] - g0) // tier_s
-            tok[idx] = tc_[d0:b]
-            ndc[idx] = nd_[d0:b]
-            mxv[idx] = mx_[d0:b]
-            mnv[idx] = mn_[d0:b]
-            rate[idx] = rt_[d0:b]
-            filled[idx] = False
-        out_src.append(src[a])
-        out_spn.append(sp)
-        series.append(tok.astype(np.float64))
-        ts_list.append(grid)
-        cv_list.append(rate)
-        p_tok.append(tok)
-        p_docs.append(ndc)
-        p_max.append(mxv)
-        p_min.append(mnv)
-        p_filled.append(filled)
-        rows_meta.append(k)
-
-    res = lagcov_eig_batch(series, p)
-    ts_blobs = encode_dod_many(ts_list)
-    val_blobs = encode_xor_many(cv_list)
-    return pd.DataFrame(
-        {
-            "source": out_src,
-            "span_s": out_spn,
-            "n_epochs": np.array(rows_meta, dtype=np.int32),
-            "lam": [r[0] for r in res],
-            "tc": [r[1] for r in res],
-            "eig": [r[2] for r in res],
-            "n_points": np.array(rows_meta, dtype=np.int32),
-            "ts_blob": ts_blobs,
-            "val_blob": val_blobs,
-            "p_epoch": ts_list,
-            "p_tok": p_tok,
-            "p_docs": p_docs,
-            "p_max": p_max,
-            "p_min": p_min,
-            "p_rate": cv_list,
-            "p_filled": p_filled,
-        }
-    )
+def tier_rows(keys, grids, values, observed, p: int, emit_points: bool) -> pd.DataFrame:
+    """Span-kernel batch -> TIER_SCHEMA rows (TIER_SCHEMA_META without
+    ``emit_points``): one batched eigh over the zero-filled token counts and
+    one segmented encode each for the grid timestamps and the rate series."""
+    tok, docs, mx, mn, rate = values
+    n = np.array([len(g) for g in grids], dtype=np.int32)
+    res = lagcov_eig_batch([t.astype(np.float64) for t in tok], p)
+    out = {
+        "source": [k[0] for k in keys],
+        "span_s": [k[1] for k in keys],
+        "n_epochs": n,
+        "lam": [r[0] for r in res],
+        "tc": [r[1] for r in res],
+        "eig": [r[2] for r in res],
+        "n_points": n,
+        "ts_blob": encode_dod_many(grids),
+        "val_blob": encode_xor_many(rate),
+    }
+    if emit_points:
+        out.update(
+            p_epoch=grids, p_tok=tok, p_docs=docs, p_max=mx, p_min=mn, p_rate=rate,
+            p_filled=[~o for o in observed],
+        )
+    return pd.DataFrame(out)
 
 
 def tier_kernel(
@@ -159,78 +107,12 @@ def tier_kernel(
     ``emit_points=False`` drops the point-array columns from the Arrow
     return path when no consumer materializes the dense tier (the retention
     store is the compressed chunks; dense rows decode on demand)."""
-    tier_s = TIERS[tier]
-    span = EIGEN_SPAN[tier]
-    sess = rollup.sparkSession
-    n_part = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    bounds = rollup.groupBy("source").agg(
-        F.min("epoch_s").alias("lo"), F.max("epoch_s").alias("hi")
-    )
-    sentinels = bounds.select(
-        "source",
-        F.explode(
-            F.sequence((F.floor(F.col("lo") / span) * span).cast("long"), "hi", F.lit(span))
-        ).alias("span_s"),
-        "lo",
-        "hi",
-    ).select(
-        "source",
-        "span_s",
-        F.lit(True).alias("is_sentinel"),
-        F.col("span_s").alias("epoch_s"),  # sorts before any data via is_sentinel
-        "lo",
-        "hi",
-        F.lit(None).cast("long").alias("token_count"),
-        F.lit(None).cast("long").alias("n_docs"),
-        F.lit(None).cast("int").alias("max_tok"),
-        F.lit(None).cast("int").alias("min_tok"),
-        F.lit(None).cast("double").alias("rate"),
-    )
-    data = rollup.select(
-        "source",
-        (F.floor(F.col("epoch_s") / span) * span).cast("long").alias("span_s"),
-        F.lit(False).alias("is_sentinel"),
-        "epoch_s",
-        F.lit(None).cast("long").alias("lo"),
-        F.lit(None).cast("long").alias("hi"),
-        "token_count",
-        "n_docs",
-        "max_tok",
-        "min_tok",
-        F.col("rate").cast("double").alias("rate"),
-    )
-    prep = (
-        sentinels.unionByName(data)
-        .repartition(n_part, "source", "span_s")
-        .sortWithinPartitions(
-            "source", "span_s", F.col("is_sentinel").desc(), "epoch_s"
-        )
-    )
+    def batch_fn(keys, grids, values, observed):
+        return tier_rows(keys, grids, values, observed, p, emit_points)
 
-    cols = None if emit_points else _META_COLS
-
-    def kernel(it):
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            src = pdf["source"].to_numpy()
-            spn = pdf["span_s"].to_numpy()
-            diff = (spn != spn[-1]) | (src != src[-1])
-            last_start = int(np.flatnonzero(diff)[-1] + 1) if diff.any() else 0
-            carry = pdf.iloc[last_start:]
-            head = pdf.iloc[:last_start]
-            if len(head):
-                r = _process(head, tier_s, span, p)
-                yield r if cols is None else r[cols]
-        if carry is not None and len(carry):
-            r = _process(carry, tier_s, span, p)
-            yield r if cols is None else r[cols]
-
-    return prep.mapInPandas(kernel, TIER_SCHEMA if emit_points else TIER_SCHEMA_META)
+    schema = TIER_SCHEMA if emit_points else TIER_SCHEMA_META
+    return dense_span_kernel(rollup, tier, TIER_PAYLOAD, batch_fn, schema)
 
 
 def split_outputs(k: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:

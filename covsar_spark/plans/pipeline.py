@@ -26,7 +26,6 @@ from ..schemas import TIERS
 def run_tiers(
     tokens: DataFrame,
     policy: str = "zero",
-    salt_buckets: int = 0,
     with_eigen: bool = True,
     with_chunks: bool = False,
     with_filled: bool = True,
@@ -34,8 +33,6 @@ def run_tiers(
     persist: bool = True,
     persist_fused: bool = True,
     horizon_s: int | None = None,
-    kernel_path: str = "tier",  # "tier" = single-shuffle sentinel kernel;
-    # "fused" = relational gapfill + repartition-sorted eigen/codec kernel
 ) -> dict[str, dict[str, DataFrame]]:
     """Returns per tier: {"rollup", "filled", "eigen"?, "chunks"?, "closure"?}."""
     from ..schemas import HORIZON_S
@@ -44,11 +41,11 @@ def run_tiers(
     out: dict[str, dict[str, DataFrame]] = {}
     finer: DataFrame | None = None
     for tier in TIERS:
-        roll = rollup_tokens(ts, tier, salt_buckets) if finer is None else cascade(finer, tier)
+        roll = rollup_tokens(ts, tier) if finer is None else cascade(finer, tier)
         if persist:
             roll = roll.persist(StorageLevel.MEMORY_AND_DISK)
         d: dict[str, DataFrame] = {"rollup": roll}
-        if policy == "zero" and with_eigen and with_chunks and kernel_path == "tier":
+        if policy == "zero" and with_eigen and with_chunks:
             # single-shuffle fast path: gap-fill + eigen + codec in one
             # kernel pass (operators/tier_kernel.py); bit-identical to the
             # relational path (tests/test_tier_kernel.py)
@@ -59,17 +56,12 @@ def run_tiers(
                 # only when several outputs are materialized separately —
                 # a single consumer (e.g. chunk write) should stream through
                 k = k.persist(StorageLevel.MEMORY_AND_DISK)
+            d["fused"] = k
             if with_filled:
-                filled, eig, chunks = split_outputs(k)
-                d.update({"fused": k, "filled": filled, "eigen": eig, "chunks": chunks})
+                d["filled"], d["eigen"], d["chunks"] = split_outputs(k)
             else:
-                d.update(
-                    {
-                        "fused": k,
-                        "eigen": k.select("source", "span_s", "n_epochs", "lam", "tc", "eig"),
-                        "chunks": k.select("source", "span_s", "n_points", "ts_blob", "val_blob"),
-                    }
-                )
+                d["eigen"] = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
+                d["chunks"] = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
         else:
             filled = gapfill(roll, tier, policy)
             if persist:
@@ -77,18 +69,9 @@ def run_tiers(
                 # without this the grid join + fill windows re-execute each
                 filled = filled.persist(StorageLevel.MEMORY_AND_DISK)
             d["filled"] = filled
-            if with_eigen and with_chunks:
-                from ..operators.fused import eigen_chunks
-
-                fused = eigen_chunks(filled, tier)
-                if persist:
-                    fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-                d["fused"] = fused
-                d["eigen"] = fused.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
-                d["chunks"] = fused.select("source", "span_s", "n_points", "ts_blob", "val_blob")
-            elif with_eigen:
+            if with_eigen:
                 d["eigen"] = eigen_rollup(filled, tier)
-            elif with_chunks:
+            if with_chunks:
                 d["chunks"] = compress_rollup(filled, tier)
         if with_closure:
             # the defining CovSAR step as a pipeline stage: per-(source,

@@ -11,9 +11,33 @@ import os
 
 from pyspark.sql import SparkSession
 
-# fixed driver heap (see the extraJavaOptions comment in get_spark);
-# overridable for memory-constrained or larger-scale runs
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
+
+def _meminfo_kb() -> dict[str, int]:
+    """/proc/meminfo as {field: kB} ({} where the file does not exist)."""
+    try:
+        with open("/proc/meminfo") as f:
+            return {k: int(v.split()[0]) for k, v in (line.split(":", 1) for line in f)}
+    except OSError:
+        return {}
+
+
+def driver_heap(env: dict | None = None, meminfo: dict[str, int] | None = None) -> tuple[str, bool]:
+    """(driver heap, pre-touch it?). ``$SPARK_DRIVER_MEM`` wins verbatim
+    (always pre-touched). Otherwise the heap is min(16g, 40% of MemTotal),
+    pre-touched only when it fits twice into MemAvailable, so committing
+    the whole heap at startup leaves at least as much for the Python workers
+    and everything else on the host (see the extraJavaOptions comment in
+    get_spark)."""
+    env = os.environ if env is None else env
+    if env.get("SPARK_DRIVER_MEM"):
+        return env["SPARK_DRIVER_MEM"], True
+    meminfo = _meminfo_kb() if meminfo is None else meminfo
+    total_mb = meminfo.get("MemTotal", 0) // 1024
+    if not total_mb:  # no /proc/meminfo: keep the historical default
+        return "16g", True
+    heap_mb = max(1, min(16 << 10, total_mb * 2 // 5))
+    avail_mb = meminfo.get("MemAvailable", 0) // 1024
+    return f"{heap_mb}m", 2 * heap_mb <= avail_mb
 
 
 def _shuffle_dir() -> str:
@@ -94,6 +118,8 @@ def get_spark(
             f"{_repo_root}{os.pathsep}{_pp}" if _pp else _repo_root
         )
 
+    # fixed driver heap, sized from the host unless $SPARK_DRIVER_MEM overrides
+    driver_mem, pretouch = driver_heap()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -110,7 +136,7 @@ def get_spark(
         # bound), large enough to amortize dispatch (CovSAR chunks its eigh
         # batches for the same reason, library.py:121-127)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", _DRIVER_MEM)
+        .config("spark.driver.memory", driver_mem)
         # measured: G1 inflates executor CPU up to 5x under 8+ concurrent
         # tasks in one local JVM (allocation-heavy shuffle+Arrow paths);
         # throughput-oriented ParallelGC cut the flagship wall ~20%.
@@ -124,10 +150,13 @@ def get_spark(
         # 16g default keeps the pre-touch inside normal session startup
         # (21.6s vs 21.2s); a 48g pre-touch would add ~75s per session.
         # On a real cluster the analogue is the standard fixed-size
-        # executor heap — lazy heap growth is a local-mode artifact.
+        # executor heap — lazy heap growth is a local-mode artifact. On a
+        # host too small to commit the whole heap up front (driver_heap)
+        # the heap stays fixed but is touched lazily.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-XX:+UseParallelGC -Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
+            f"-XX:+UseParallelGC -Xms{driver_mem}"
+            + (" -XX:+AlwaysPreTouch" if pretouch else ""),
         )
         # local mode: shuffle through tmpfs when present (a real cluster sets
         # its own local dirs; this only affects the sandbox benchmarks)

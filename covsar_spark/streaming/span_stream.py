@@ -9,8 +9,9 @@ append-mode output of `streaming/rollup_stream.py` persisted to a tier
 table, or any rollup source). Rows are grouped by (source, eigen-span) in
 `applyInPandasWithState`; state accumulates the span's observed epochs, and
 an event-time timeout set at span end fires once the watermark passes it —
-only then does the span run the EXACT batch kernel (`tier_kernel._process`:
-dense zero-filled grid -> batched lag-cov eigh -> Gorilla XOR + DoD
+only then does the span run the EXACT batch kernel through its public
+per-span entry points (`spanfill.fill_span`: dense zero-filled grid ->
+`tier_kernel.tier_rows`: batched lag-cov eigh -> Gorilla XOR + DoD
 encode) and emit its TIER_SCHEMA_META row. No span is ever computed twice
 and none is computed early: emission is append-mode by construction.
 
@@ -53,7 +54,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from ..operators.tier_kernel import TIER_SCHEMA_META, _META_COLS, _process
+from ..operators.spanfill import fill_span
+from ..operators.tier_kernel import TIER_PAYLOAD, TIER_SCHEMA_META, tier_rows
 from ..schemas import EIGEN_P, EIGEN_SPAN, ROLLUP_SCHEMA, TIERS
 
 # per-span accumulator: parallel arrays over observed epochs (append-only;
@@ -73,39 +75,25 @@ SPAN_STATE_SCHEMA = T.StructType(
 
 
 def _finalize(source: str, span_s: int, tier_s: int, span: int, p: int, st) -> pd.DataFrame:
-    """Run the batch kernel for one closed span: sentinel row pinning the
-    dense-span grid bounds + the span's observed rows, epoch-sorted —
-    exactly the layout `tier_kernel`'s sort produces, so `_process` is
-    reused verbatim and parity is by construction."""
-    epochs, tok, docs, mx, mn, rate = (np.asarray(a) for a in st)
+    """Run the batch kernel for one closed span: the span's observed rows
+    (last row per epoch) scattered onto the FULL span grid by the
+    skeleton's `fill_span`, then `tier_rows` — the same two calls the batch
+    `tier_kernel` makes per span, so parity is by construction."""
+    epochs, *vals = (np.asarray(a) for a in st)
     order = np.argsort(epochs, kind="stable")
     # keep the LAST row per epoch (a re-finalized upstream window wins);
-    # a heartbeat-only span has ZERO observations — sentinel-only input
-    # yields the full zero-filled grid, the batch empty-span layout
-    epochs = epochs[order]
+    # a heartbeat-only span has ZERO observations and finalizes as the full
+    # zero-filled grid, the batch empty-span layout
+    srt = epochs[order]
     keep = (
-        np.concatenate([epochs[1:] != epochs[:-1], [True]])
-        if len(epochs)
-        else np.zeros(0, dtype=bool)
+        np.concatenate([srt[1:] != srt[:-1], [True]]) if len(srt) else np.zeros(0, dtype=bool)
     )
     sel = order[keep]
-    n = 1 + len(sel)
-    pdf = pd.DataFrame(
-        {
-            "source": np.repeat(source, n),
-            "span_s": np.repeat(np.int64(span_s), n),
-            "is_sentinel": np.concatenate([[True], np.zeros(len(sel), dtype=bool)]),
-            "epoch_s": np.concatenate([[span_s], np.asarray(st[0])[sel]]),
-            "lo": np.repeat(np.int64(span_s), n),
-            "hi": np.repeat(np.int64(span_s + span - tier_s), n),
-            "token_count": np.concatenate([[0], tok[sel]]),
-            "n_docs": np.concatenate([[0], docs[sel]]),
-            "max_tok": np.concatenate([[0], mx[sel]]),
-            "min_tok": np.concatenate([[0], mn[sel]]),
-            "rate": np.concatenate([[0.0], rate[sel]]),
-        }
+    grid = np.arange(span_s, span_s + span, tier_s, dtype=np.int64)
+    dense, observed = fill_span(grid, tier_s, epochs[sel], [v[sel] for v in vals], TIER_PAYLOAD)
+    return tier_rows(
+        [(source, span_s)], [grid], [[d] for d in dense], [observed], p, emit_points=False
     )
-    return _process(pdf, tier_s, span, p)[_META_COLS]
 
 
 def make_span_updater(tier: str, p: int = EIGEN_P):

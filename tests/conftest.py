@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -10,7 +12,7 @@ from covsar_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("covsar_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark("covsar_spark_tests", cores=len(os.sched_getaffinity(0)), shuffle_partitions=8)
     yield s
 
 

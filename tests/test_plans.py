@@ -535,3 +535,19 @@ def test_heartbeat_coverage_single_exchange(spark):
     plan = _plan(QUERIES["heartbeat_coverage_1h"](spark, "/root/testdata/sf0.001"))
     assert plan.count("Exchange") == 1, plan
     assert "Python" not in plan
+
+
+def test_run_tiers_relational_policy_eigen_and_chunks(spark, tiny_cols):
+    """A non-zero fill policy takes the relational path: the eigen and chunk
+    tables both come from the same gap-filled tier, one row per span each."""
+    from covsar_spark.plans.pipeline import run_tiers
+    from .conftest import cols_to_spark
+
+    d = run_tiers(
+        cols_to_spark(spark, tiny_cols), policy="ffill", with_eigen=True, with_chunks=True,
+        persist=False,
+    )["1m"]
+    assert "fused" not in d
+    eig = d["eigen"].select("source", "span_s", "n_epochs").orderBy("source", "span_s").collect()
+    ch = d["chunks"].select("source", "span_s", "n_points").orderBy("source", "span_s").collect()
+    assert eig and [tuple(r) for r in eig] == [tuple(r) for r in ch]

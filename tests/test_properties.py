@@ -412,3 +412,102 @@ def test_heartbeat_sweep_is_interval_union_measure(pairs):
             hi = max(hi, b)
     covered += hi - lo
     assert swept == covered
+
+
+_SPAN_TICKS = 5  # span = 5 tier steps: short spans, many span groups per frame
+_PAYLOAD = [("token_count", "long", 0), ("max_tok", "int", np.nan), ("rate", "double", 0.0)]
+
+
+def _prep_frame(sources, seed):
+    """A sentinel ∪ observed-rows frame as the span-kernel skeleton receives
+    it from Arrow: sorted (source, span_s, is_sentinel DESC, epoch_s), null
+    longs as NaN. ``sources`` is [(start tick, [gap ticks before each
+    observation])]; gaps longer than a span leave fully empty spans."""
+    import pandas as pd
+
+    tier_s, span = 60, 60 * _SPAN_TICKS
+    rng = np.random.default_rng(seed)
+    rows = []
+    for s, (start, gaps) in enumerate(sources):
+        ticks = start + np.cumsum(np.asarray(gaps) + 1)
+        eps = ticks * tier_s
+        lo, hi = int(eps[0]), int(eps[-1])
+        for sp in range(lo // span * span, hi + 1, span):
+            rows.append((f"s{s}", sp, True, sp, lo, hi, np.nan, np.nan, np.nan))
+        for e in eps.tolist():
+            mx = np.nan if rng.random() < 0.2 else float(rng.integers(1, 100))
+            rows.append(
+                (f"s{s}", e // span * span, False, e, np.nan, np.nan,
+                 float(rng.integers(0, 1000)), mx, float(rng.normal()))
+            )
+    pdf = pd.DataFrame(
+        rows,
+        columns=["source", "span_s", "is_sentinel", "epoch_s", "lo", "hi",
+                 "token_count", "max_tok", "rate"],
+    )
+    pdf = pdf.sort_values(
+        ["source", "span_s", "is_sentinel", "epoch_s"],
+        ascending=[True, True, False, True], kind="mergesort",
+    ).reset_index(drop=True)
+    return pdf, tier_s, span
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=30),
+            st.lists(st.integers(min_value=0, max_value=3 * _SPAN_TICKS), min_size=1, max_size=25),
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    st.lists(st.floats(min_value=0.0, max_value=1.0), max_size=10),
+    st.integers(min_value=0, max_value=2**31),
+)
+def test_span_carry_loop_is_batch_boundary_invariant(sources, cuts, seed):
+    """The skeleton's carry loop over a frame cut at arbitrary Arrow-batch
+    boundaries (empty batches, span groups split mid-group) fills exactly
+    what one call over the concatenated frame fills, and that fill is the
+    dense [lo, hi] lattice per span: observed values verbatim, each column's
+    gap value elsewhere, fully empty spans included."""
+    from covsar_spark.operators.spanfill import fill_groups, span_batches
+
+    pdf, tier_s, span = _prep_frame(sources, seed)
+    bounds = sorted({0, len(pdf), *(int(c * len(pdf)) for c in cuts)})
+    frames = [pdf.iloc[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+    frames.insert(len(frames) // 2, pdf.iloc[:0])
+
+    whole = fill_groups(pdf, tier_s, span, _PAYLOAD)
+    keys, grids, values, observed = [], [], [[] for _ in _PAYLOAD], []
+    for batch in span_batches(iter(frames)):
+        k, g, v, o = fill_groups(batch, tier_s, span, _PAYLOAD)
+        keys += k
+        grids += g
+        observed += o
+        for out, col in zip(values, v):
+            out += col
+    assert keys == whole[0]
+    for got, exp in zip([grids, observed, *values], [whole[1], whole[3], *whole[2]]):
+        assert len(got) == len(exp)
+        for a, b in zip(got, exp):
+            assert a.dtype == b.dtype
+            np.testing.assert_array_equal(a, b)
+
+    # independent oracle: every span on the grid, every observation placed
+    data = pdf[~pdf["is_sentinel"]]
+    obs = {(s, e): i for i, (s, e) in enumerate(zip(data["source"], data["epoch_s"]))}
+    n_spans = 0
+    for (src, sp), grid, mask, *cols in zip(keys, grids, observed, *values):
+        n_spans += 1
+        sent = pdf[pdf["is_sentinel"] & (pdf["source"] == src) & (pdf["span_s"] == sp)].iloc[0]
+        g0, g1 = max(sp, int(sent["lo"])), min(sp + span, int(sent["hi"]) + tier_s)
+        np.testing.assert_array_equal(grid, np.arange(g0, g1, tier_s))
+        for pos, e in enumerate(grid.tolist()):
+            i = obs.get((src, e))
+            assert mask[pos] == (i is not None)
+            for (name, _, gap), col in zip(_PAYLOAD, cols):
+                want = gap if i is None else data[name].iloc[i]
+                np.testing.assert_equal(col[pos], want)
+    assert n_spans == int(pdf["is_sentinel"].sum())
+    assert sum(int(m.sum()) for m in observed) == len(data)
