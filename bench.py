@@ -28,8 +28,8 @@ Noise adjudication, two mechanisms:
   accounting splits cleanly: co-tenant load = total busy jiffies minus our
   subtree's jiffies, reported in CORES. Every query records the max
   co-tenant cores over its window; any query whose window exceeded
-  $SPARK_GRAFT_NOISE_CORES (default 6.0 of this box's 32 logical CPUs) is
-  re-run once and the cleaner-window wall kept. The TWO FLAGSHIP entries use
+  $SPARK_GRAFT_NOISE_CORES (default 6.0 co-tenant cores) is re-run once
+  and the cleaner-window wall kept. The TWO FLAGSHIP entries use
   the much stricter $SPARK_GRAFT_FLAGSHIP_NOISE_CORES (default 0.5) with up
   to two extra repeats — round-7 lesson: 1.3 co-tenant cores inflated the
   driver's flagship >2x while sitting below the suite-wide trigger. The
@@ -57,7 +57,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 PROBE_MIN = float(os.environ.get("SPARK_GRAFT_PROBE_MIN", "400"))
 PROBE_MAX_WAIT_S = int(os.environ.get("SPARK_GRAFT_PROBE_MAX_WAIT_S", "600"))
 NOISE_CORES = float(os.environ.get("SPARK_GRAFT_NOISE_CORES", "6.0"))

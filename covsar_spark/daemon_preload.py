@@ -20,6 +20,8 @@ practice, exposed by Spark precisely for this purpose via
 ``manager()`` when executed with ``python -m``).
 """
 
+import sys
+
 import numpy  # noqa: F401
 import pandas  # noqa: F401
 
@@ -34,8 +36,9 @@ try:  # pyarrow backs every Arrow/pandas UDF path; tolerate its absence
     _t = pyarrow.table({"x": [1]})
     pyarrow.Table.from_pandas(_t.to_pandas())
     del _t
-except Exception:  # pragma: no cover
-    pass
+except Exception as e:  # pragma: no cover
+    # stderr only: the daemon's stdout carries the worker-port handshake
+    print(f"covsar_spark: pyarrow preload failed: {type(e).__name__}: {e}", file=sys.stderr)
 
 from pyspark.daemon import manager
 

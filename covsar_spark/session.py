@@ -8,6 +8,7 @@ sizing); only ``master`` and the partition counts change.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -200,6 +201,11 @@ def get_spark(
     return spark
 
 
+def _warn(step: str, exc: Exception) -> None:
+    """Report a failed best-effort step on stderr (stdout carries results)."""
+    print(f"covsar_spark: {step} failed: {type(exc).__name__}: {exc}", file=sys.stderr)
+
+
 _WORKER_WARMED: set[str] = set()
 
 
@@ -237,8 +243,8 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
             .mapInPandas(_touch, "id long")
             .count()
         )
-    except Exception:
-        pass  # warmup is best-effort; a failure must never block the session
+    except Exception as e:  # best-effort: a failure must never block the session
+        _warn("python worker warmup", e)
 
 
 _JVM_WARMED: set[str] = set()
@@ -333,10 +339,10 @@ def _warm_jvm_paths(spark: SparkSession) -> None:
             spark.read.parquet(d).count()
         finally:
             shutil.rmtree(d, ignore_errors=True)
-    except Exception:
-        pass  # warmup is best-effort; a failure must never block the session
+    except Exception as e:  # best-effort: a failure must never block the session
+        _warn("jvm operator warmup", e)
     finally:
         try:
             spark.sparkContext.setJobDescription(None)
-        except Exception:
-            pass
+        except Exception as e:
+            _warn("warmup job description reset", e)

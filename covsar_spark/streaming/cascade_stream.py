@@ -37,7 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollup import cascade
-from .rollup_stream import read_tokens_stream, streaming_rollup
+from ..schemas import TOKENS_SCHEMA
+from .rollup_stream import streaming_rollup
+from .runner import file_stream, run_stream
 
 
 def _epoch_day(col: str = "epoch_s") -> F.Column:
@@ -66,7 +68,7 @@ def run_cascade_stream(
     re-numbering from 0 over existing batch_id partitions."""
     tier_1m = f"{out_dir}/tier_1m"
     tier_1h = f"{out_dir}/tier_1h"
-    m1 = streaming_rollup(read_tokens_stream(spark, tokens_path), "1m", watermark)
+    m1 = streaming_rollup(file_stream(spark, tokens_path, TOKENS_SCHEMA, max_files=4), "1m", watermark)
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.persist()
@@ -108,12 +110,5 @@ def run_cascade_stream(
             sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             b.unpersist()
 
-    q = (
-        m1.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint or f"{out_dir}/_checkpoint")
-        .foreachBatch(maintain)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    run_stream(m1, "append", checkpoint=checkpoint or f"{out_dir}/_checkpoint", foreach_batch=maintain)
     return tier_1m, tier_1h

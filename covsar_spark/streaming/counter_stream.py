@@ -19,9 +19,9 @@ hand-off assumes no older sample arrives after a newer one (out-of-order
 repair at tier level is refresh_tier's job, operators/refresh.py).
 
 Reference analogue: the running per-key state carried across epochs is the
-reference's nearest-neighbor phase-linking accumulator (covsar/pl/nn.py:5-9),
-the same motif stateful.py streams; here the carried scalar is the last
-counter sample and the fold is Prometheus increase() reset semantics.
+reference's nearest-neighbor phase-linking accumulator (covsar/pl/nn.py:5-9);
+here the carried scalar is the last counter sample and the fold is
+Prometheus increase() reset semantics.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from typing import Iterable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -101,56 +101,3 @@ def counter_increase_stream(
     return stream.groupBy("source").applyInPandasWithState(
         _update, OUT_SCHEMA, STATE_SCHEMA, output_mode, GroupStateTimeout.NoTimeout
     )
-
-
-def run_counter_stream_to_memory(
-    spark: SparkSession, path: str, tier_s: int = 3600, name: str = "ctr_stream",
-    max_files: int = 1,
-) -> DataFrame:
-    """Replay a directory of ordered parquet chunks as a stream and collect
-    every emitted partial row (memory sink keeps all update-mode rows, so
-    the partials per window stay visible for the parity sum)."""
-    stream = (
-        spark.readStream.schema(COUNTER_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-    q = (
-        counter_increase_stream(stream, tier_s=tier_s)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def run_counter_stream_to_tier(
-    spark: SparkSession, path: str, out_dir: str, tier_s: int = 3600,
-    max_files: int = 1,
-) -> str:
-    """Exactly-once file-sink form: drive the (possibly grown) source dir to
-    completion and return the partial-tier path. The checkpoint carries
-    source offsets, the sink commit log AND the per-series GroupState —
-    a re-invocation after new files arrive processes only the new data,
-    appends only its partials, and the carried last-counter value survives
-    the restart (pinned by tests/test_streaming_counter.py)."""
-    stream = (
-        spark.readStream.schema(COUNTER_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-    tier_path = f"{out_dir}/counter_partials"
-    q = (
-        counter_increase_stream(stream, tier_s=tier_s, output_mode="append")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_path)
-        .option("checkpointLocation", f"{out_dir}/_ctr_checkpoint")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return tier_path

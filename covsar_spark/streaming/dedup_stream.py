@@ -16,19 +16,10 @@ watermark, whose state grows unboundedly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import EPOCH0_UNIX, HORIZON_S
-
-
-def read_documents_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
-    static = spark.read.parquet(path)  # schema probe only (streams need one)
-    return (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
 
 
 def streaming_exact_dedup(docs_stream: DataFrame, watermark: str = "365 days") -> DataFrame:
@@ -46,18 +37,3 @@ def streaming_exact_dedup(docs_stream: DataFrame, watermark: str = "365 days") -
         ).alias("ts"),
     )
     return with_h.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["h"])
-
-
-def run_dedup_stream_to_memory(
-    spark: SparkSession, path: str, name: str = "dedup_stream_out"
-) -> DataFrame:
-    q = (
-        streaming_exact_dedup(read_documents_stream(spark, path))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")

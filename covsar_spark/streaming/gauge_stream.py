@@ -32,7 +32,7 @@ from typing import Iterable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -159,52 +159,3 @@ def time_weighted_avg_stream(
     return stream.groupBy("source").applyInPandasWithState(
         _update, OUT_SCHEMA, STATE_SCHEMA, output_mode, GroupStateTimeout.NoTimeout
     )
-
-
-def run_gauge_stream_to_memory(
-    spark: SparkSession, path: str, tier_s: int = 3600, name: str = "gauge_stream",
-    max_files: int = 1,
-) -> DataFrame:
-    stream = (
-        spark.readStream.schema(GAUGE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-    q = (
-        time_weighted_avg_stream(stream, tier_s=tier_s)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def run_gauge_stream_to_tier(
-    spark: SparkSession, path: str, out_dir: str, tier_s: int = 3600,
-    max_files: int = 1,
-) -> str:
-    """Exactly-once file-sink form: each (source, window) row is emitted
-    exactly once, and the checkpoint carries source offsets, the sink
-    commit log AND the open-window GroupState — a re-invocation after new
-    files (or the flush sentinel) arrive finalizes only the still-open
-    windows, merging the carried int64 partials across the restart."""
-    stream = (
-        spark.readStream.schema(GAUGE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-    tier_path = f"{out_dir}/gauge_tier"
-    q = (
-        time_weighted_avg_stream(stream, tier_s=tier_s, output_mode="append")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_path)
-        .option("checkpointLocation", f"{out_dir}/_gauge_checkpoint")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return tier_path

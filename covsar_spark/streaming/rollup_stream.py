@@ -17,14 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import EPOCH0_UNIX, HORIZON_S, TIERS, TOKENS_SCHEMA
-
-
-def read_tokens_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(TOKENS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
+from .runner import file_stream, run_stream
 
 
 def streaming_rollup(tokens_stream: DataFrame, tier: str, watermark: str = "10 minutes") -> DataFrame:
@@ -59,28 +52,6 @@ def streaming_rollup(tokens_stream: DataFrame, tier: str, watermark: str = "10 m
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    path: str,
-    tier: str,
-    name: str = "stream_out",
-    watermark: str = "10 minutes",
-):
-    """Drive the stream to completion over a static dir (test/smoke path).
-    ``watermark`` must cover the event-time spread one micro-batch
-    reordering can produce (see run_span_stream_to_memory)."""
-    q = (
-        streaming_rollup(read_tokens_stream(spark, path), tier, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def run_stream_to_files(
     spark: SparkSession,
     path: str,
@@ -94,13 +65,9 @@ def run_stream_to_files(
     `streaming/span_stream.py` at — the composed streamed pipeline
     (tests/test_streaming_span.py::test_composed_stream_pipeline_matches_batch).
     Durable checkpoint: a restart resumes source offsets + window state."""
-    q = (
-        streaming_rollup(read_tokens_stream(spark, path), tier, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
+    run_stream(
+        streaming_rollup(file_stream(spark, path, TOKENS_SCHEMA, max_files=4), tier, watermark),
+        "append",
+        path=out_path,
+        checkpoint=checkpoint_path,
     )
-    q.processAllAvailable()
-    q.stop()

@@ -17,7 +17,7 @@ per-register MAX the batch cascade uses — no raw replay.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import _spark_hash40, hll_rank_sql, hll_reg_sql
@@ -49,44 +49,6 @@ def streaming_hll_registers(
     )
 
 
-def run_hll_register_stream(
-    spark: SparkSession,
-    events_path: str,
-    out_dir: str,
-    key: str = "user_id",
-    tier: str = "1h",
-    watermark: str = "10 minutes",
-    checkpoint: str | None = None,
-) -> str:
-    """Drive the register stream over a (possibly grown) static dir to
-    completion and return the tier path. The checkpoint defaults to a
-    sibling of the sink so a restart resumes source offsets AND the file
-    sink's commit log — re-invocation after new files arrive processes
-    only the new data and appends only newly-finalized windows.
-
-    Windows younger than the watermark at end-of-input stay pending (the
-    streaming statement of "the window has not closed yet"); they finalize
-    on the next invocation once later data advances the watermark."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    tier_path = f"{out_dir}/hll_registers_{tier}"
-    q = (
-        streaming_hll_registers(stream, key=key, tier=tier, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_path)
-        .option("checkpointLocation", checkpoint or f"{out_dir}/_hll_checkpoint")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return tier_path
-
-
 def streaming_cms_matrix(
     events_stream: DataFrame,
     key: str = "user_id",
@@ -113,35 +75,3 @@ def streaming_cms_matrix(
     return agg.select(
         F.unix_timestamp(F.col("win.start")).alias("epoch_s"), "j", "bucket", "cnt"
     )
-
-
-def run_cms_matrix_stream(
-    spark: SparkSession,
-    events_path: str,
-    out_dir: str,
-    key: str = "user_id",
-    tier: str = "1h",
-    watermark: str = "10 minutes",
-    checkpoint: str | None = None,
-) -> str:
-    """Drive the CMS matrix stream over a (possibly grown) static dir to
-    completion and return the tier path — same exactly-once file-sink
-    contract as run_hll_register_stream."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    tier_path = f"{out_dir}/cms_matrix_{tier}"
-    q = (
-        streaming_cms_matrix(stream, key=key, tier=tier, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_path)
-        .option("checkpointLocation", checkpoint or f"{out_dir}/_cms_checkpoint")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return tier_path

@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 
 from ..operators.spanfill import fill_span
 from ..operators.tier_kernel import TIER_PAYLOAD, TIER_SCHEMA_META, tier_rows
-from ..schemas import EIGEN_P, EIGEN_SPAN, ROLLUP_SCHEMA, TIERS
+from ..schemas import EIGEN_P, EIGEN_SPAN, TIERS
 
 # per-span accumulator: parallel arrays over observed epochs (append-only;
 # finalize sorts + dedups, so micro-batch arrival order is irrelevant)
@@ -205,65 +205,3 @@ def heartbeat_rows(
         F.lit(0.0).alias("rate"),
         F.lit(True).alias("filled"),
     )
-
-
-def run_span_stream_to_memory(
-    spark: SparkSession,
-    rollup_path: str,
-    tier: str,
-    name: str = "span_out",
-    max_files: int = 2,
-    watermark: str = "10 minutes",
-):
-    """Drive the span stream over a static rollup dir (test/smoke path).
-
-    ``watermark`` (allowed lateness) must cover the event-time spread a
-    single micro-batch reordering can produce: a static dir's files replay
-    in mtime order, so rows older than (max seen event - lateness) in a
-    LATER file are dropped as late — exactly the semantics a live run has."""
-    stream = (
-        spark.readStream.schema(ROLLUP_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(rollup_path)
-    )
-    q = (
-        span_stream(stream, tier, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def run_span_stream_to_files(
-    spark: SparkSession,
-    rollup_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    tier: str,
-    max_files: int = 2,
-    watermark: str = "10 minutes",
-) -> None:
-    """File-sink form with a durable checkpoint: a restart resumes the file
-    source offsets AND the operator state store, so spans finalized before
-    the stop are never recomputed or re-emitted and spans that were
-    in-flight keep their accumulated epochs (exactly-once across restarts —
-    tests/test_streaming_span.py::test_span_stream_restart_resumes_exactly_once)."""
-    stream = (
-        spark.readStream.schema(ROLLUP_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(rollup_path)
-    )
-    q = (
-        span_stream(stream, tier, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO)
 
 from scripts.scaling import CALIBRATE  # noqa: E402
 from scripts.scaling_profile import parse_eventlog  # noqa: E402
+from covsar_spark.session import driver_heap  # noqa: E402
 
 CHILD = r"""
 import json, os, sys, time
@@ -96,7 +97,7 @@ GETSPARK = {
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
 }
-PLAIN = {"spark.driver.memory": "16g"}
+PLAIN = {"spark.driver.memory": driver_heap()[0]}
 
 
 def variants() -> dict[str, dict]:

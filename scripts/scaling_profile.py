@@ -44,13 +44,14 @@ evdir = sys.argv[4]
 from functools import reduce
 from pyspark.sql import SparkSession, functions as F
 from covsar_spark.plans.pipeline import run_tiers
+from covsar_spark.session import driver_heap
 
 spark = (
     SparkSession.builder.master(f"local[{cores}]")
     .appName(f"scaling_profile_{cores}")
     .config("spark.sql.shuffle.partitions", str(cores * 2))
     .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "16g")
+    .config("spark.driver.memory", driver_heap()[0])
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     .config("spark.eventLog.enabled", "true")
     .config("spark.eventLog.dir", f"file:{evdir}")

@@ -1,12 +1,15 @@
-"""Driver heap sizing (no JVM): the default heap is derived from the host,
-never exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim."""
+"""Session helpers (no JVM): the default driver heap is derived from the
+host, never exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; a
+failed best-effort warmup never blocks the session but says so on stderr."""
 
 from __future__ import annotations
+
+from unittest import mock
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from covsar_spark.session import _meminfo_kb, driver_heap
+from covsar_spark.session import _meminfo_kb, _warm_jvm_paths, _warm_python_workers, driver_heap
 
 
 def _mb(heap: str) -> int:
@@ -35,3 +38,25 @@ def test_this_host_heap_fits():
 
 def test_env_override_is_verbatim():
     assert driver_heap(env={"SPARK_DRIVER_MEM": "6g"}, meminfo={"MemTotal": 1 << 20}) == ("6g", True)
+
+
+def test_failed_warmups_report_on_stderr(capsys, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_SKIP_WARMUP", raising=False)
+    spark = mock.MagicMock()
+    spark.sparkContext.applicationId = "fake-app-warmup-test"
+    spark.range.side_effect = RuntimeError("planted range failure")
+
+    def set_job_description(desc):
+        if desc is None:
+            raise RuntimeError("planted reset failure")
+
+    spark.sparkContext.setJobDescription.side_effect = set_job_description
+    _warm_python_workers(spark, 2)
+    _warm_jvm_paths(spark)
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert captured.err.splitlines() == [
+        "covsar_spark: python worker warmup failed: RuntimeError: planted range failure",
+        "covsar_spark: jvm operator warmup failed: RuntimeError: planted range failure",
+        "covsar_spark: warmup job description reset failed: RuntimeError: planted reset failure",
+    ]

@@ -343,7 +343,8 @@ def test_hll_register_stream_restart_exactly_once(spark, tmp_path):
         hll_rank_sql,
         hll_reg_sql,
     )
-    from covsar_spark.streaming.sketch_stream import run_hll_register_stream
+    from covsar_spark.streaming.runner import file_stream, run_stream
+    from covsar_spark.streaming.sketch_stream import streaming_hll_registers
 
     df, pdf = _events(spark, n_days=4, per_day=500, seed=31)
     early = df.where(F.col("ts") < "2024-03-03").orderBy("ts").coalesce(1)
@@ -352,12 +353,20 @@ def test_hll_register_stream_restart_exactly_once(spark, tmp_path):
     early.write.parquet(src)
 
     out = str(tmp_path / "tiers")
-    tier = run_hll_register_stream(spark, src, out)
+    tier = f"{out}/hll_registers_1h"
+
+    def run():  # same sink and checkpoint on every call: a second call is a restart
+        run_stream(
+            streaming_hll_registers(file_stream(spark, src)), "append",
+            path=tier, checkpoint=f"{out}/_hll_checkpoint",
+        )
+
+    run()
     first = spark.read.parquet(tier).toPandas()
     assert len(first) > 0  # earlier windows finalized once the wm advanced
 
     late.write.mode("append").parquet(src)
-    tier = run_hll_register_stream(spark, src, out)
+    run()
     second = spark.read.parquet(tier)
     s = second.toPandas()
 
@@ -526,7 +535,8 @@ def test_cms_matrix_stream_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from covsar_spark.operators.sketches import CMS_D, cms_bucket_sql, _spark_hash40_salted
-    from covsar_spark.streaming.sketch_stream import run_cms_matrix_stream
+    from covsar_spark.streaming.runner import file_stream, run_stream
+    from covsar_spark.streaming.sketch_stream import streaming_cms_matrix
 
     df, pdf = _events(spark, n_days=2, per_day=600, seed=13)
     flush = spark.createDataFrame(
@@ -536,7 +546,11 @@ def test_cms_matrix_stream_matches_batch(spark, tmp_path):
     src = str(tmp_path / "ev")
     df.select("ts", "user_id").unionByName(flush).orderBy("ts").coalesce(1).write.parquet(src)
 
-    tier = run_cms_matrix_stream(spark, src, str(tmp_path / "tiers"), watermark="1 minute")
+    tier = str(tmp_path / "tiers" / "cms_matrix_1h")
+    run_stream(
+        streaming_cms_matrix(file_stream(spark, src), watermark="1 minute"), "append",
+        path=tier, checkpoint=str(tmp_path / "tiers" / "_cms_checkpoint"),
+    )
     got = (
         spark.read.parquet(tier).toPandas()
         .sort_values(["epoch_s", "j", "bucket"]).reset_index(drop=True)

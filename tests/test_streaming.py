@@ -4,16 +4,23 @@ the batch rollup for every finalized window."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from covsar_spark.datagen import write_tokens
 from covsar_spark.operators.rollup import rollup_tokens, with_event_time
-from covsar_spark.streaming.rollup_stream import run_stream_to_memory
+from covsar_spark.schemas import TOKENS_SCHEMA
+from covsar_spark.streaming.rollup_stream import streaming_rollup
+from covsar_spark.streaming.runner import file_stream, run_stream
 
 
 def test_streaming_rollup_matches_batch(spark, tmp_path):
     path = str(tmp_path / "tok")
     write_tokens(path, 2000, seed=42)
-    got = run_stream_to_memory(spark, path, "1h", name="t_stream_1h").toPandas()
+    got = run_stream(
+        streaming_rollup(file_stream(spark, path, TOKENS_SCHEMA, max_files=4), "1h"),
+        "append",
+        name="t_stream_1h",
+    ).toPandas()
     batch = rollup_tokens(with_event_time(spark.read.parquet(path)), "1h").toPandas()
     # append mode only emits windows the watermark has passed; every emitted
     # window must match batch exactly, and most windows must have emitted
@@ -140,38 +147,13 @@ def test_binary_file_source_roundtrip(spark, tmp_path):
         assert r["payload_sha"] == sha  # byte-exact through the source + Arrow
 
 
-def test_stateful_totals_match_batch(spark, tmp_path):
-    """applyInPandasWithState running totals: the LAST update per source must
-    equal the batch aggregate exactly (integral state)."""
-    from covsar_spark.streaming.stateful import run_stateful_to_memory
-
-    path = str(tmp_path / "tok_state")
-    write_tokens(path, 2000, seed=42)
-    out = run_stateful_to_memory(spark, path, name="t_stateful").toPandas()
-    # multiple update rows per source (one per micro-batch); take the final
-    final = out.sort_values("total_docs").groupby("source").tail(1)
-    batch = (
-        spark.read.parquet(path)
-        .groupBy("source")
-        .agg({"n_tok": "sum", "*": "count"})
-        .toPandas()
-        .rename(columns={"sum(n_tok)": "t", "count(1)": "d"})
-        .set_index("source")
-    )
-    assert len(final) == len(batch)
-    for _, r in final.iterrows():
-        assert int(r["total_tokens"]) == int(batch.loc[r["source"], "t"])
-        assert int(r["total_docs"]) == int(batch.loc[r["source"], "d"])
-    assert (out.groupby("source").size() >= 1).all()
-
-
 def test_streaming_dedup_matches_batch(spark, tmp_path):
     """Streaming exact dedup (dropDuplicatesWithinWatermark on the content
     hash) must emit exactly one row per distinct content, and the surviving
     hash set must equal the batch exact_dedup's — the continuous form of
     operators/dedup.exact_dedup."""
     from covsar_spark.operators.dedup import exact_dedup
-    from covsar_spark.streaming.dedup_stream import run_dedup_stream_to_memory
+    from covsar_spark.streaming.dedup_stream import streaming_exact_dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     path = str(tmp_path / "docs")
@@ -179,7 +161,9 @@ def test_streaming_dedup_matches_batch(spark, tmp_path):
     # the fixture span batches
     docs.repartition(3).write.parquet(path)
 
-    got = run_dedup_stream_to_memory(spark, path, name="t_dedup_stream").toPandas()
+    got = run_stream(
+        streaming_exact_dedup(file_stream(spark, path, max_files=4)), "append", name="t_dedup_stream"
+    ).toPandas()
     batch = exact_dedup(spark.read.parquet(path)).toPandas()
 
     assert len(got) == len(batch), (len(got), len(batch))
@@ -444,3 +428,45 @@ def test_cascade_stream_restart_resumes_exactly_once(spark, tmp_path):
     assert len(got) == len(want) and len(got) > 0
     for c in ("token_count", "n_docs"):
         assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c
+
+
+def test_run_stream_reraises_a_failing_batch(spark, tmp_path):
+    """A batch that raises surfaces as StreamingQueryException, and no
+    stream is left active afterwards."""
+    from pyspark.errors import StreamingQueryException
+
+    path = str(tmp_path / "tok_fail")
+    write_tokens(path, 200, seed=7)
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("planted batch failure")
+
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        run_stream(
+            file_stream(spark, path, TOKENS_SCHEMA), "append",
+            checkpoint=str(tmp_path / "ckpt"), foreach_batch=boom,
+        )
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize(
+    "sinks",
+    [{}, {"name": "t", "foreach_batch": print}, {"path": "out"}],
+    ids=["no_sink", "two_sinks", "path_without_checkpoint"],
+)
+def test_run_stream_rejects_bad_sinks(sinks):
+    with pytest.raises(ValueError):
+        run_stream(None, "append", **sinks)
+
+
+def test_run_stream_stops_an_interrupted_query():
+    """An interrupt while draining leaves the query running in Spark (unlike
+    a failed batch, which terminates it), so the runner must stop it."""
+    from unittest import mock
+
+    query = mock.MagicMock()
+    started = query.writeStream.outputMode.return_value.foreachBatch.return_value.start.return_value
+    started.processAllAvailable.side_effect = KeyboardInterrupt
+    with pytest.raises(KeyboardInterrupt):
+        run_stream(query, "append", foreach_batch=print)
+    started.stop.assert_called_once_with()

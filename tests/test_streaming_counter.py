@@ -11,7 +11,8 @@ import numpy as np
 import pandas as pd
 
 from covsar_spark.operators.counters import counter_increase
-from covsar_spark.streaming.counter_stream import run_counter_stream_to_memory
+from covsar_spark.streaming.counter_stream import COUNTER_SCHEMA, counter_increase_stream
+from covsar_spark.streaming.runner import file_stream, run_stream
 
 
 def _planted(seed: int, n_per_source: int = 400, mod: int = 9_000):
@@ -60,7 +61,10 @@ def test_streamed_counter_partials_sum_to_batch(spark, tmp_path):
     path = str(tmp_path / "scrape")
     _write_ordered_chunks(pdf, path, n_chunks=7)
 
-    got = run_counter_stream_to_memory(spark, path, tier_s=3600, name="t_ctr").toPandas()
+    got = run_stream(
+        counter_increase_stream(file_stream(spark, path, COUNTER_SCHEMA), tier_s=3600),
+        "update", name="t_ctr",
+    ).toPandas()
     summed = (
         got.groupby(["source", "epoch_s"], as_index=False)
         .agg(increase=("increase", "sum"), n_samples=("n_samples", "sum"), n_resets=("n_resets", "sum"))
@@ -94,7 +98,10 @@ def test_streamed_counter_state_is_one_row_per_series(spark, tmp_path):
                         "ord": np.arange(20, dtype=np.int64), "ctr": ctr})
     path = str(tmp_path / "edge")
     _write_ordered_chunks(pdf, path, n_chunks=2)
-    got = run_counter_stream_to_memory(spark, path, tier_s=3600, name="t_ctr_edge").toPandas()
+    got = run_stream(
+        counter_increase_stream(file_stream(spark, path, COUNTER_SCHEMA), tier_s=3600),
+        "update", name="t_ctr_edge",
+    ).toPandas()
     total = got.groupby(["source"], as_index=False).agg(
         increase=("increase", "sum"), n_resets=("n_resets", "sum")
     )
@@ -109,8 +116,6 @@ def test_counter_stream_restart_exactly_once(spark, tmp_path):
     only their partials, and the carried last-counter state survives the
     restart — so the summed tier equals the batch operator on the full
     data, which double-emission or state loss would both break."""
-    from covsar_spark.streaming.counter_stream import run_counter_stream_to_tier
-
     pdf = _planted(29)
     path = str(tmp_path / "scrape")
     out = str(tmp_path / "tiers")
@@ -122,14 +127,24 @@ def test_counter_stream_restart_exactly_once(spark, tmp_path):
 
     for f in held_back:
         shutil.move(os.path.join(path, f), os.path.join(str(tmp_path), f))
-    tier = run_counter_stream_to_tier(spark, path, out, tier_s=3600)
+    tier = f"{out}/counter_partials"
+
+    def run():  # same sink and checkpoint on every call: a second call is a restart
+        run_stream(
+            counter_increase_stream(
+                file_stream(spark, path, COUNTER_SCHEMA), tier_s=3600, output_mode="append"
+            ),
+            "append", path=tier, checkpoint=f"{out}/_ctr_checkpoint",
+        )
+
+    run()
     first = spark.read.parquet(tier).toPandas()
     assert len(first) > 0
 
     # run 2: later chunks arrive, same checkpoint
     for f in held_back:
         shutil.move(os.path.join(str(tmp_path), f), os.path.join(path, f))
-    tier = run_counter_stream_to_tier(spark, path, out, tier_s=3600)
+    run()
     both = spark.read.parquet(tier).toPandas()
     assert len(both) > len(first)
 

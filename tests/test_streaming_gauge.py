@@ -11,7 +11,8 @@ import numpy as np
 import pandas as pd
 
 from covsar_spark.operators.counters import time_weighted_avg
-from covsar_spark.streaming.gauge_stream import run_gauge_stream_to_memory
+from covsar_spark.streaming.gauge_stream import GAUGE_SCHEMA, time_weighted_avg_stream
+from covsar_spark.streaming.runner import file_stream, run_stream
 
 TIER_S = 3600
 US = 1_000_000
@@ -59,7 +60,10 @@ def test_streamed_gauge_finalized_windows_equal_batch(spark, tmp_path):
     _write_chunks(pdf, path, n_chunks=6, flush=True)
 
     got = (
-        run_gauge_stream_to_memory(spark, path, tier_s=TIER_S, name="t_gauge")
+        run_stream(
+            time_weighted_avg_stream(file_stream(spark, path, GAUGE_SCHEMA), tier_s=TIER_S),
+            "update", name="t_gauge",
+        )
         .toPandas()
         .sort_values(["source", "epoch_s"])
         .reset_index(drop=True)
@@ -97,7 +101,10 @@ def test_streamed_gauge_window_split_across_batches(spark, tmp_path):
     path = str(tmp_path / "edge")
     _write_chunks(pdf, path, n_chunks=2, flush=True)
     got = (
-        run_gauge_stream_to_memory(spark, path, tier_s=TIER_S, name="t_gauge_edge")
+        run_stream(
+            time_weighted_avg_stream(file_stream(spark, path, GAUGE_SCHEMA), tier_s=TIER_S),
+            "update", name="t_gauge_edge",
+        )
         .toPandas()
         .sort_values(["epoch_s"])
         .reset_index(drop=True)
@@ -117,8 +124,6 @@ def test_gauge_stream_restart_exactly_once(spark, tmp_path):
     store. Full tier == batch operator, zero duplicate windows."""
     import shutil
 
-    from covsar_spark.streaming.gauge_stream import run_gauge_stream_to_tier
-
     pdf = _planted(17)
     path = str(tmp_path / "gauge")
     out = str(tmp_path / "tiers")
@@ -128,13 +133,23 @@ def test_gauge_stream_restart_exactly_once(spark, tmp_path):
     for f in held_back:
         shutil.move(os.path.join(path, f), os.path.join(str(tmp_path), f))
 
-    tier = run_gauge_stream_to_tier(spark, path, out, tier_s=TIER_S)
+    tier = f"{out}/gauge_tier"
+
+    def run():  # same sink and checkpoint on every call: a second call is a restart
+        run_stream(
+            time_weighted_avg_stream(
+                file_stream(spark, path, GAUGE_SCHEMA), tier_s=TIER_S, output_mode="append"
+            ),
+            "append", path=tier, checkpoint=f"{out}/_gauge_checkpoint",
+        )
+
+    run()
     first = spark.read.parquet(tier).toPandas()
     assert len(first) > 0
 
     for f in held_back:
         shutil.move(os.path.join(str(tmp_path), f), os.path.join(path, f))
-    tier = run_gauge_stream_to_tier(spark, path, out, tier_s=TIER_S)
+    run()
     both = spark.read.parquet(tier)
     s = both.toPandas()
     assert len(s) > len(first)

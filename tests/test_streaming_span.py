@@ -13,11 +13,8 @@ from pyspark.sql import functions as F
 
 from covsar_spark.operators.tier_kernel import tier_kernel
 from covsar_spark.schemas import EIGEN_SPAN, ROLLUP_SCHEMA, TIERS
-from covsar_spark.streaming.span_stream import (
-    heartbeat_rows,
-    run_span_stream_to_files,
-    run_span_stream_to_memory,
-)
+from covsar_spark.streaming.runner import file_stream, run_stream
+from covsar_spark.streaming.span_stream import heartbeat_rows, span_stream
 
 TIER = "1m"
 TIER_S = TIERS[TIER]
@@ -72,9 +69,12 @@ def test_span_stream_matches_batch_kernel(spark, tmp_path, tier):
     # in arbitrary order within one write, so any real row may trail the max
     # seen event time by up to the horizon without being "late"
     got = (
-        run_span_stream_to_memory(
-            spark, path, tier, name=f"span_parity_{tier}",
-            watermark=f"{4 * span} seconds",
+        run_stream(
+            span_stream(
+                file_stream(spark, path, ROLLUP_SCHEMA, max_files=2), tier,
+                watermark=f"{4 * span} seconds",
+            ),
+            "append", name=f"span_parity_{tier}",
         )
         .filter(F.col("source") != "zz_flush")
         .toPandas()
@@ -123,7 +123,10 @@ def test_heartbeat_emits_empty_interior_spans(spark, tmp_path):
     spark.createDataFrame(pdf, schema=ROLLUP_SCHEMA).coalesce(2).write.parquet(path)
 
     got = (
-        run_span_stream_to_memory(spark, path, TIER, name="span_hb", watermark="4 hours")
+        run_stream(
+            span_stream(file_stream(spark, path, ROLLUP_SCHEMA, max_files=2), TIER, watermark="4 hours"),
+            "append", name="span_hb",
+        )
         .filter(F.col("source") == "alpha")
         .toPandas()
         .sort_values("span_s")
@@ -166,8 +169,9 @@ def test_span_stream_last_per_epoch_wins(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(path)
 
     got = (
-        run_span_stream_to_memory(
-            spark, path, TIER, name="span_dedup", max_files=1, watermark="4 hours"
+        run_stream(
+            span_stream(file_stream(spark, path, ROLLUP_SCHEMA, max_files=1), TIER, watermark="4 hours"),
+            "append", name="span_dedup",
         )
         .filter(F.col("source") == "solo")
         .toPandas()
@@ -213,6 +217,15 @@ def test_span_stream_restart_resumes_exactly_once(spark, tmp_path):
     out = str(tmp_path / "spans_out")
     ckpt = str(tmp_path / "ckpt")
 
+    def run():  # same sink and checkpoint on every call: a second call is a restart
+        run_stream(
+            span_stream(
+                file_stream(spark, str(src / "*"), ROLLUP_SCHEMA, max_files=2), TIER,
+                watermark="1 hour",
+            ),
+            "append", path=out, checkpoint=ckpt,
+        )
+
     part1 = _span_rows("s", [0, 1])
     # lateness 1h: wm after flush1 = BASE + 3*SPAN + 60 — past span 1's end,
     # below span 4's first row
@@ -220,7 +233,7 @@ def test_span_stream_restart_resumes_exactly_once(spark, tmp_path):
     spark.createDataFrame(pd.DataFrame(part1 + flush1, columns=cols), schema=ROLLUP_SCHEMA).coalesce(
         1
     ).write.parquet(str(src / "part1"))
-    run_span_stream_to_files(spark, str(src / "*"), out, ckpt, TIER, watermark="1 hour")
+    run()
 
     got1 = spark.read.parquet(out).filter(F.col("source") == "s").toPandas()
     assert sorted(got1["span_s"]) == [BASE, BASE + SPAN]
@@ -230,7 +243,7 @@ def test_span_stream_restart_resumes_exactly_once(spark, tmp_path):
     spark.createDataFrame(pd.DataFrame(part2 + flush2, columns=cols), schema=ROLLUP_SCHEMA).coalesce(
         1
     ).write.parquet(str(src / "part2"))
-    run_span_stream_to_files(spark, str(src / "*"), out, ckpt, TIER, watermark="1 hour")
+    run()
 
     got = (
         spark.read.parquet(out)
@@ -274,7 +287,7 @@ def test_rollup_stream_output_feeds_span_stream_schema(spark, tmp_path):
 
     src = tmp_path / "tokens_empty"
     src.mkdir()
-    stream = spark.readStream.schema(TOKENS_SCHEMA).parquet(str(src))
+    stream = file_stream(spark, str(src), TOKENS_SCHEMA)
     out = streaming_rollup(stream, "1m")
     got = [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
     want = [(f.name, f.dataType.simpleString()) for f in ROLLUP_SCHEMA.fields]
@@ -389,9 +402,12 @@ def test_composed_stream_pipeline_matches_batch(spark, tmp_path):
     ).parquet(span_in)
 
     got = (
-        run_span_stream_to_memory(
-            spark, span_in, TIER, name="span_composed",
-            watermark=f"{4 * SPAN} seconds",
+        run_stream(
+            span_stream(
+                file_stream(spark, span_in, ROLLUP_SCHEMA, max_files=2), TIER,
+                watermark=f"{4 * SPAN} seconds",
+            ),
+            "append", name="span_composed",
         )
         .filter(F.col("source") != "zz_flush")
         .toPandas()
