@@ -383,6 +383,141 @@ def run_flagship(spark, n_rows: int, with_closure: bool = False) -> tuple[float,
     return wall, total_points, (t0, t1)
 
 
+def _warn(step: str, exc: Exception) -> None:
+    """Report a failed best-effort step on stderr (stdout carries results)."""
+    print(f"covsar_spark: {step} failed: {type(exc).__name__}: {exc}", file=sys.stderr)
+
+
+def warm_session(spark, cores: int) -> None:
+    """Pay the session's one-time runtime start-up before the timed region:
+    this harness times each query ONCE, so whatever the first query of a
+    kind pays for (worker forks, class loads, interpreter JIT) would land
+    in that query's wall. Runtime initialization like JVM startup, not
+    data or result caching: both jobs run on synthetic ``spark.range``
+    input and keep nothing. Best-effort: a failure is reported on stderr
+    and never blocks the run.
+
+    1. The Python worker pool. With worker reuse on (the default), the
+       first Arrow/pandas query otherwise pays `cores` x (fork +
+       numpy/pandas import) INSIDE its own wall — in the bench suite that
+       one-time ~3-5s landed entirely on whichever query hit Python first
+       (closure_pair_correction in list order). The two mapInPandas are
+       CHAINED deliberately: chained Python-eval nodes in one stage each
+       hold their own worker per task, so this stage keeps 2 x cores
+       workers alive at once and leaves a 2 x cores idle pool — the peak
+       demand of the densest declared plans (a Python stage chained with a
+       second Python node, or a broadcast-side Arrow subtree running
+       concurrently with the main stage). With a cores-sized pool the
+       first such query forked the second half of the pool inside its own
+       wall (measured +1.5-2s on its one-shot).
+    2. The common physical-operator classes: hash aggregate, window,
+       explode, sort-merge + broadcast join, top-k, grouped-map Arrow,
+       parquet write/read, the noop sink. A cold JVM pays first-class-load
+       + interpreter-JIT for each operator family INSIDE the first query
+       that uses it (measured one-shots in a fresh session: rollup_1m
+       1.8-2.1s vs 0.8-1.1s after this warmup; closure_invert 5.7s cold vs
+       1.9s steady), misattributed to whichever declared query runs first
+       in each family.
+
+    ``get_spark`` does not run this: every other caller pays these costs
+    in the first query that needs them (perfbench in its untimed checked
+    pass), not before work that may never come."""
+    try:
+        def _touch(it):
+            import numpy  # noqa: F401 — force the heavyweight imports
+            import pandas  # noqa: F401
+
+            yield from it
+
+        (
+            spark.range(cores, numPartitions=cores)
+            .mapInPandas(_touch, "id long")
+            .mapInPandas(_touch, "id long")
+            .count()
+        )
+    except Exception as e:  # best-effort: a failure must never block the run
+        _warn("python worker warmup", e)
+
+    try:
+        from pyspark.sql import Window
+
+        spark.sparkContext.setJobDescription("session warmup: jvm operator paths")
+
+        def noop(df):
+            df.write.format("noop").mode("overwrite").save()
+
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
+        df = spark.range(0, 100_000, 1, n_part).select(
+            (F.col("id") % 97).alias("k"),
+            (F.col("id") % 7).cast("string").alias("s"),
+            F.col("id").cast("double").alias("v"),
+            (F.col("id") * 60).alias("ts"),
+        )
+        # expression classes: hashes, string ops, higher-order fns, explode
+        noop(
+            df.select(
+                F.md5(F.col("s")).alias("h1"),
+                F.xxhash64("k", "ts").alias("h2"),
+                F.split(F.concat_ws(" ", "s", "s"), " ").alias("w"),
+            ).select(
+                "h2",
+                F.transform("w", lambda x: F.length(x)).alias("t"),
+                F.aggregate("w", F.lit(0), lambda a, x: a + F.length(x)).alias("agg"),
+                F.filter("w", lambda x: F.length(x) > 0).alias("f"),
+                F.explode(F.sequence(F.lit(0), F.lit(2))).alias("e"),
+            )
+        )
+        # partial+final hash aggregate
+        agg = df.groupBy("k", "s").agg(
+            F.sum("v").alias("sv"),
+            F.count("*").alias("n"),
+            F.min("ts").alias("mn"),
+            F.max("ts").alias("mx"),
+            F.avg("v").alias("av"),
+        )
+        noop(agg)
+        # window functions: one exchange + sort, lag/cumsum/rank frames
+        w = Window.partitionBy("k").orderBy("ts")
+        noop(
+            df.select(
+                "k",
+                "ts",
+                F.lag("v").over(w).alias("lg"),
+                F.sum("v").over(w).alias("cs"),
+                F.row_number().over(w).alias("rn"),
+            )
+        )
+        # joins: broadcast (small side) and sort-merge (hinted)
+        noop(df.join(F.broadcast(agg.limit(50)), ["k", "s"]).select("k", "sv"))
+        noop(df.join(agg.hint("merge"), ["k", "s"]).select("k", "sv"))
+        # global sort / top-k
+        noop(df.orderBy("v").limit(100))
+        # grouped-map Arrow path (mapInPandas is warmed by the worker pool)
+        import pandas as pd
+
+        def _gm(pdf: pd.DataFrame) -> pd.DataFrame:
+            return pdf.groupby("k", as_index=False).agg(sv=("v", "sum"))
+
+        noop(df.select("k", "v").groupBy("k").applyInPandas(_gm, "k long, sv double"))
+        # parquet writer + vectorized reader (tier refresh/compaction path)
+        import shutil
+        import tempfile
+
+        d = tempfile.mkdtemp(prefix="covsar_warmup_")
+        try:
+            agg.write.mode("overwrite").parquet(d)
+            spark.read.parquet(d).count()
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
+    except Exception as e:  # best-effort: a failure must never block the run
+        _warn("jvm operator warmup", e)
+    finally:
+        try:
+            spark.sparkContext.setJobDescription(None)
+        except Exception as e:
+            _warn("warmup job description reset", e)
+
+
 def main():
     from covsar_spark.contract import QUERIES
     from covsar_spark.session import get_spark
@@ -397,6 +532,7 @@ def main():
         calib_pre = host_probe()
 
     spark = get_spark("covsar_bench", cores=CPUS, shuffle_partitions=CPUS)
+    warm_session(spark, CPUS)
     try:
         sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:

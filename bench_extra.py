@@ -25,6 +25,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def _spark(gc_log: str | None = None):
+    from bench import warm_session
     from covsar_spark.session import get_spark
 
     extra = {}
@@ -32,7 +33,9 @@ def _spark(gc_log: str | None = None):
         extra["spark.driver.extraJavaOptions"] = (
             f"-XX:+UseParallelGC -Xlog:gc*:file={gc_log}:time,uptime"
         )
-    return get_spark("covsar_bench_extra", cores=CPUS, shuffle_partitions=CPUS, extra_conf=extra)
+    spark = get_spark("covsar_bench_extra", cores=CPUS, shuffle_partitions=CPUS, extra_conf=extra)
+    warm_session(spark, CPUS)
+    return spark
 
 
 def noop(df):

@@ -2,15 +2,16 @@
 
 Python workers fork from the pyspark daemon process; a worker forked from a
 bare daemon pays ``import numpy; import pandas`` (plus pyarrow for Arrow
-UDFs) inside the first task it runs. The session warmup pre-forks one
-worker per core, but any stage topology that needs MORE simultaneous
-workers than that — chained ArrowEvalPython nodes in one stage (each node
-holds its own worker per task), or a broadcast-side Arrow subtree executing
-concurrently with the main stage, or several tier kernels materializing in
-one job — forks fresh workers mid-query, and N cold imports under full CPU
-contention turn into a multi-second stall inside whichever query hit it
-(measured: ann_ivf_topk one-shot 9-21s vs 1.4s steady, all 32 tasks of the
-final stage burning 15-21s each while 32 just-forked workers imported).
+UDFs) inside the first task it runs. The session forks no worker up
+front: the first Arrow stage forks one per task, and any stage topology
+that needs MORE simultaneous workers than are idle — chained
+ArrowEvalPython nodes in one stage (each node holds its own worker per
+task), or a broadcast-side Arrow subtree executing concurrently with the
+main stage, or several tier kernels materializing in one job — forks fresh
+workers mid-query, and N cold imports under full CPU contention turn into a
+multi-second stall inside whichever query hit it (measured: ann_ivf_topk
+one-shot 9-21s vs 1.4s steady, all 32 tasks of the final stage burning
+15-21s each while 32 just-forked workers imported).
 
 Importing the libraries ONCE in the daemon makes every subsequent worker
 fork inherit them via copy-on-write: worker startup drops from ~1s of

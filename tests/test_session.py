@@ -1,15 +1,19 @@
 """Session helpers (no JVM): the default driver heap is derived from the
-host, never exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; a
-failed best-effort warmup never blocks the session but says so on stderr."""
+host, never exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim;
+building the session runs no job; a failed best-effort bench warmup never
+blocks the run but says so on stderr."""
 
 from __future__ import annotations
 
+import os
 from unittest import mock
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from covsar_spark.session import _meminfo_kb, _warm_jvm_paths, _warm_python_workers, driver_heap
+from bench import warm_session
+from covsar_spark import session
+from covsar_spark.session import _meminfo_kb, driver_heap, get_spark
 
 
 def _mb(heap: str) -> int:
@@ -40,8 +44,17 @@ def test_env_override_is_verbatim():
     assert driver_heap(env={"SPARK_DRIVER_MEM": "6g"}, meminfo={"MemTotal": 1 << 20}) == ("6g", True)
 
 
-def test_failed_warmups_report_on_stderr(capsys, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SKIP_WARMUP", raising=False)
+def test_get_spark_runs_no_job(monkeypatch):
+    """Session build only builds: no job (a warmup, a probe read) runs in it."""
+    monkeypatch.setattr(os, "environ", os.environ.copy())  # get_spark sets BLAS pins
+    monkeypatch.setattr(session, "SparkSession", mock.MagicMock())
+    spark = get_spark(cores=2)
+    spark.range.assert_not_called()
+    assert spark.read.mock_calls == []
+    spark.createDataFrame.assert_not_called()
+
+
+def test_failed_warmups_report_on_stderr(capsys):
     spark = mock.MagicMock()
     spark.sparkContext.applicationId = "fake-app-warmup-test"
     spark.range.side_effect = RuntimeError("planted range failure")
@@ -51,8 +64,7 @@ def test_failed_warmups_report_on_stderr(capsys, monkeypatch):
             raise RuntimeError("planted reset failure")
 
     spark.sparkContext.setJobDescription.side_effect = set_job_description
-    _warm_python_workers(spark, 2)
-    _warm_jvm_paths(spark)
+    warm_session(spark, 2)
     captured = capsys.readouterr()
     assert captured.out == ""
     assert captured.err.splitlines() == [
