@@ -136,6 +136,10 @@ def get_spark(
         # bound), large enough to amortize dispatch (CovSAR chunks its eigh
         # batches for the same reason, library.py:121-127)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        # one `suite` pass compiles about 250 distinct whole-stage classes;
+        # Spark's default LRU of 100 would evict each one before its next
+        # use, so every pass would recompile (and re-JIT) all of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", driver_mem)
         # measured: G1 inflates executor CPU up to 5x under 8+ concurrent
         # tasks in one local JVM (allocation-heavy shuffle+Arrow paths);
@@ -163,18 +167,15 @@ def get_spark(
         .config("spark.local.dir", _shuffle_dir())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # fork Python workers from a daemon that has ALREADY imported
+        # numpy/pandas/pyarrow (copy-on-write): the session starts with no
+        # worker pool, so every worker a stage forks (the first Arrow stage,
+        # then any topology needing more simultaneous workers than are idle:
+        # chained Arrow nodes, broadcast-side Python subtrees, concurrent tier
+        # kernels) otherwise pays cold imports under full CPU contention
+        # inside the query that hit it — see covsar_spark/daemon_preload.py
+        .config("spark.python.daemon.module", "covsar_spark.daemon_preload")
     )
-    # fork Python workers from a daemon that has ALREADY imported
-    # numpy/pandas/pyarrow (copy-on-write): the session starts with no
-    # worker pool, so every worker a stage forks (the first Arrow stage,
-    # then any topology needing more simultaneous workers than are idle:
-    # chained Arrow nodes, broadcast-side Python subtrees, concurrent tier
-    # kernels) otherwise pays cold imports under full CPU contention inside
-    # the query that hit it — see covsar_spark/daemon_preload.py
-    if not os.environ.get("SPARK_GRAFT_NO_DAEMON_PRELOAD"):
-        builder = builder.config(
-            "spark.python.daemon.module", "covsar_spark.daemon_preload"
-        )
     jar = iceberg_jar()
     if jar is not None:  # pragma: no cover — jars absent in this image
         # Hadoop-type catalog `covsar` so `write_tier(table="covsar.db.t")`

@@ -1,7 +1,8 @@
-"""Session helpers (no JVM): the default driver heap is derived from the
-host, never exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim;
-building the session runs no job; a failed best-effort bench warmup never
-blocks the run but says so on stderr."""
+"""Session helpers: the default driver heap is derived from the host, never
+exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; building the
+session runs no job; a failed best-effort bench warmup never blocks the run
+but says so on stderr; the generated-code cache holds more classes than
+Spark's default 100 (the one test here that uses the JVM)."""
 
 from __future__ import annotations
 
@@ -72,3 +73,23 @@ def test_failed_warmups_report_on_stderr(capsys):
         "covsar_spark: jvm operator warmup failed: RuntimeError: planted range failure",
         "covsar_spark: warmup job description reset failed: RuntimeError: planted reset failure",
     ]
+
+
+def _codegen_compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_outlives_more_than_100_classes(spark):
+    """A re-run plan reuses its generated classes even after more than 100
+    other distinct classes were compiled since its last run (Spark's default
+    cache of 100 recompiles every one of them)."""
+    plans = [f"id * {i} + 7919 AS x" for i in range(2, 62)]
+    rounds = []
+    for _ in range(2):
+        before = _codegen_compiles(spark)
+        for expr in plans:
+            spark.range(8).selectExpr(expr).collect()
+        rounds.append(_codegen_compiles(spark) - before)
+    assert rounds[0] > 100
+    assert rounds[1] == 0
