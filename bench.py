@@ -343,9 +343,10 @@ def run_flagship(spark, n_rows: int, with_closure: bool = False) -> tuple[float,
     """Full tier pipeline; returns (seconds, rolled-up points across tiers).
 
     ``with_closure`` adds the defining CovSAR stage — per-span closure
-    evaluation + fit + least-norm correction + drift/chi2 stats — off the
-    same persisted rollups, and materializes its output in the timed region
-    (reported as the second headline number)."""
+    evaluation + fit + least-norm correction + drift/chi2 stats — which the
+    tier kernel computes in the same pass over each span, and materializes
+    its output in the timed region (reported as the second headline
+    number)."""
     from covsar_spark.plans.pipeline import run_tiers
 
     from functools import reduce

@@ -40,6 +40,9 @@ Python worker (constant hoisting, closure_inten.py:178-191). Stacks are
 capped at ``max_epochs`` epochs per span exactly like the reference's
 ``files[:20]`` limit (closure_inten.py:73), which bounds kernel memory:
 N=20 -> 190 pairs, 1140 triplets.
+
+`run_tiers(with_closure=True)` fuses these stats into its tier kernel
+(operators/tier_kernel.py); this operator stays their equality oracle.
 """
 
 from __future__ import annotations

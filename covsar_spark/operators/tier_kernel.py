@@ -21,6 +21,14 @@ compress_rollup results bit-for-bit (tests/test_tier_kernel.py); the series
 fed to eigh is the same canonical zero-filled, epoch-sorted grid.
 `tier_rows` is also the streamed span finalizer's kernel
 (streaming/span_stream.py).
+
+``closure=True`` also runs the closure correction's stats
+(operators/closure_correct.correct_span_batch) on each span's OBSERVED
+token counts — the raw-rollup series the grouped `closure_correct` reads,
+epoch-ordered and capped at MAX_EPOCHS — and emits them as ``c_``-prefixed
+columns of the same span rows, so `run_tiers(with_closure=True)` needs no
+second shuffle or Python pass over the rollup. `closure_stats` recovers
+the `closure_correct.span_stats` frame (tests/test_tier_kernel.py).
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import EIGEN_P
+from .closure_correct import _STATS_SCHEMA, MAX_EPOCHS, correct_span_batch
 from .codecs import encode_dod_many, encode_xor_many
 from .eigen import lagcov_eig_batch
 from .spanfill import dense_span_kernel
@@ -60,6 +69,8 @@ TIER_SCHEMA = T.StructType(
     ]
 )
 TIER_SCHEMA_META = T.StructType([f for f in TIER_SCHEMA.fields if not f.name.startswith("p_")])
+# closure stats ride as c_-prefixed columns (span_stats' columns past the key)
+CLOSURE_FIELDS = [T.StructField(f"c_{f.name}", f.dataType, False) for f in _STATS_SCHEMA.fields[2:]]
 
 # zero-filled epochs carry rate 0; observed epochs carry the INPUT rollup's
 # rate column verbatim (not a tok/tier_s recompute, which would silently
@@ -73,10 +84,14 @@ TIER_PAYLOAD = [
 ]
 
 
-def tier_rows(keys, grids, values, observed, p: int, emit_points: bool) -> pd.DataFrame:
+def tier_rows(
+    keys, grids, values, observed, p: int, emit_points: bool, closure: bool = False
+) -> pd.DataFrame:
     """Span-kernel batch -> TIER_SCHEMA rows (TIER_SCHEMA_META without
     ``emit_points``): one batched eigh over the zero-filled token counts and
-    one segmented encode each for the grid timestamps and the rate series."""
+    one segmented encode each for the grid timestamps and the rate series;
+    ``closure`` appends the CLOSURE_FIELDS from one batched closure
+    correction over the observed token counts."""
     tok, docs, mx, mn, rate = values
     n = np.array([len(g) for g in grids], dtype=np.int32)
     res = lagcov_eig_batch([t.astype(np.float64) for t in tok], p)
@@ -96,22 +111,31 @@ def tier_rows(keys, grids, values, observed, p: int, emit_points: bool) -> pd.Da
             p_epoch=grids, p_tok=tok, p_docs=docs, p_max=mx, p_min=mn, p_rate=rate,
             p_filled=[~o for o in observed],
         )
+    if closure:
+        stats = correct_span_batch(
+            [t[o][:MAX_EPOCHS].astype(np.float64) for t, o in zip(tok, observed)]
+        )
+        for f in CLOSURE_FIELDS:
+            out[f.name] = [st[f.name[2:]] for st in stats]
     return pd.DataFrame(out)
 
 
 def tier_kernel(
-    rollup: DataFrame, tier: str, p: int = EIGEN_P, emit_points: bool = True
+    rollup: DataFrame, tier: str, p: int = EIGEN_P, emit_points: bool = True, closure: bool = False
 ) -> DataFrame:
-    """rollup -> span rows with (eigen, blobs[, dense filled points arrays]).
+    """rollup -> span rows with (eigen, blobs[, dense filled points arrays]
+    [, closure stats]).
 
     ``emit_points=False`` drops the point-array columns from the Arrow
     return path when no consumer materializes the dense tier (the retention
     store is the compressed chunks; dense rows decode on demand)."""
 
     def batch_fn(keys, grids, values, observed):
-        return tier_rows(keys, grids, values, observed, p, emit_points)
+        return tier_rows(keys, grids, values, observed, p, emit_points, closure)
 
     schema = TIER_SCHEMA if emit_points else TIER_SCHEMA_META
+    if closure:
+        schema = T.StructType(schema.fields + CLOSURE_FIELDS)
     return dense_span_kernel(rollup, tier, TIER_PAYLOAD, batch_fn, schema)
 
 
@@ -132,3 +156,12 @@ def split_outputs(k: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     eig = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
     chunks = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
     return filled, eig, chunks
+
+
+def closure_stats(k: DataFrame) -> DataFrame:
+    """``closure=True`` kernel output -> the `closure_correct.span_stats`
+    frame. An all-gap span has no observed row, so the grouped operator
+    emits no row for it; drop it here too."""
+    return k.filter(F.col("c_n_epochs") > 0).select(
+        "source", "span_s", *(F.col(f.name).alias(f.name[2:]) for f in CLOSURE_FIELDS)
+    )

@@ -49,9 +49,9 @@ def run_tiers(
             # single-shuffle fast path: gap-fill + eigen + codec in one
             # kernel pass (operators/tier_kernel.py); bit-identical to the
             # relational path (tests/test_tier_kernel.py)
-            from ..operators.tier_kernel import split_outputs, tier_kernel
+            from ..operators.tier_kernel import closure_stats, split_outputs, tier_kernel
 
-            k = tier_kernel(roll, tier, emit_points=with_filled)
+            k = tier_kernel(roll, tier, emit_points=with_filled, closure=with_closure)
             if persist and persist_fused:
                 # only when several outputs are materialized separately —
                 # a single consumer (e.g. chunk write) should stream through
@@ -62,6 +62,13 @@ def run_tiers(
             else:
                 d["eigen"] = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
                 d["chunks"] = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
+            if with_closure:
+                # the defining CovSAR step (per-(source, eigen-span) closure
+                # evaluation + fit + least-norm correction + drift/chi2
+                # stats) ran inside the kernel on each span's observed
+                # series: a filter-and-select over its span rows, no second
+                # shuffle or Python pass over the rollup
+                d["closure"] = closure_stats(k)
         else:
             filled = gapfill(roll, tier, policy)
             if persist:
@@ -73,14 +80,12 @@ def run_tiers(
                 d["eigen"] = eigen_rollup(filled, tier)
             if with_chunks:
                 d["chunks"] = compress_rollup(filled, tier)
-        if with_closure:
-            # the defining CovSAR step as a pipeline stage: per-(source,
-            # eigen-span) closure evaluation + fit + least-norm correction +
-            # drift/chi2 stats (operators/closure_correct.py) off the same
-            # persisted rollup the eigen kernel reads
-            from ..operators.closure_correct import closure_correct, span_stats
+            if with_closure:
+                # the grouped closure operator (operators/closure_correct.py)
+                # off the same persisted rollup
+                from ..operators.closure_correct import closure_correct, span_stats
 
-            d["closure"] = span_stats(closure_correct(roll, tier, emit_pairs=False))
+                d["closure"] = span_stats(closure_correct(roll, tier, emit_pairs=False))
         out[tier] = d
         finer = roll
     return out

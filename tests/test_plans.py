@@ -195,6 +195,24 @@ def test_tier_kernel_single_exchange(spark, tiny_cols):
     assert "SortMergeJoin" not in plan and "NestedLoopJoin" not in plan
 
 
+def test_run_tiers_closure_reads_persisted_kernel(spark, tiny_cols):
+    """On the kernel path the closure stats come out of the tier kernel:
+    the closure frame scans its persisted span rows, with no grouped
+    pandas pass and no span-bucket repartition of the rollup."""
+    from covsar_spark.plans.pipeline import run_tiers
+    from .conftest import cols_to_spark
+
+    d = run_tiers(cols_to_spark(spark, tiny_cols), with_chunks=True, with_closure=True)["1m"]
+    plan = _plan(d["closure"])
+    assert "InMemoryTableScan" in plan and "MapInPandas" in plan, plan
+    # nothing shuffles above the cached kernel output
+    assert "Exchange" not in plan.split("InMemoryRelation")[0], plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "_bkt" not in plan, plan
+    for t in ("rollup", "fused"):
+        d[t].unpersist()
+
+
 def test_flagship_reuses_filled_tier(spark):
     """flagship() feeds the gap-filled 1m tier to BOTH the hourly summary
     and the eigen kernel; the persisted tier must appear as InMemoryRelation
