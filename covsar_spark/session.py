@@ -173,7 +173,11 @@ def get_spark(
         # then any topology needing more simultaneous workers than are idle:
         # chained Arrow nodes, broadcast-side Python subtrees, concurrent tier
         # kernels) otherwise pays cold imports under full CPU contention
-        # inside the query that hit it — see covsar_spark/daemon_preload.py
+        # inside the query that hit it. Before forking, the daemon also
+        # stamps its zipimporters so a task's invalidate_caches() no longer
+        # re-parses pyspark.zip (Python < 3.13), and freezes the preloaded
+        # heap out of the per-task gc.collect() — see
+        # covsar_spark/daemon_preload.py
         .config("spark.python.daemon.module", "covsar_spark.daemon_preload")
     )
     jar = iceberg_jar()

@@ -2,18 +2,27 @@
 exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; building the
 session runs no job; a failed best-effort bench warmup never blocks the run
 but says so on stderr; the generated-code cache holds more classes than
-Spark's default 100 (the one test here that uses the JVM)."""
+Spark's default 100; the Python daemon's zipimporters re-read an archive
+only when it changed, and its workers reuse the inherited archive directory
+and frozen heap across tasks (the codegen and worker tests use the JVM)."""
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
+import sys
+import zipfile
+import zipimport
 from unittest import mock
+
+import pytest
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bench import warm_session
-from covsar_spark import session
+from covsar_spark import daemon_preload, session
 from covsar_spark.session import _meminfo_kb, driver_heap, get_spark
 
 
@@ -93,3 +102,84 @@ def test_codegen_cache_outlives_more_than_100_classes(spark):
         rounds.append(_codegen_compiles(spark) - before)
     assert rounds[0] > 100
     assert rounds[1] == 0
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name in modules:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ zipimporters do not re-read")
+def test_zip_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, ["m1"])
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", daemon_preload._invalidate_if_changed)
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return real_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        import m1
+
+        assert m1.NAME == "m1"
+        importlib.invalidate_caches()  # first call stamps, as the daemon's does
+        reads.clear()
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads == []
+
+        _write_zip(archive, ["m1", "m2"])  # a larger archive: a new stamp
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        import m2
+
+        assert m2.NAME == "m2"
+
+        os.remove(archive)
+        importlib.invalidate_caches()  # falls through to the original: no raise
+    finally:
+        for name in ("m1", "m2"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+
+
+def _worker_state(batches):
+    import pandas as pd
+
+    (archive,) = [k for k in zipimport._zip_directory_cache if k.endswith("pyspark.zip")]
+    for _ in batches:
+        pass
+    yield pd.DataFrame(
+        {
+            "pid": [os.getpid()],
+            "dir_id": [id(zipimport._zip_directory_cache[archive])],
+            "frozen": [gc.get_freeze_count()],
+        }
+    )
+
+
+def test_workers_keep_zip_directory_and_frozen_heap_across_tasks(spark):
+    """A reused worker's pyspark.zip directory is the same dict in every
+    task it runs (the per-task invalidation does not re-read it), and the
+    daemon froze its preloaded heap before forking. Idle workers are handed
+    out in turn, so each job runs more tasks than the pool holds workers."""
+    schema = "pid long, dir_id long, frozen long"
+    rows = [
+        (job, r)
+        for job in range(2)
+        for r in spark.range(0, 64, 1, 32).mapInPandas(_worker_state, schema).collect()
+    ]
+    dir_ids, jobs = {}, {}
+    for job, r in rows:
+        dir_ids.setdefault(r.pid, set()).add(r.dir_id)
+        jobs.setdefault(r.pid, set()).add(job)
+    assert any(len(j) == 2 for j in jobs.values())
+    assert all(len(ids) == 1 for ids in dir_ids.values())
+    assert all(r.frozen > 0 for _, r in rows)
