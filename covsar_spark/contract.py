@@ -1970,7 +1970,7 @@ def eigen_1m(spark, sf_dir):
 
     # in-kernel zero fill (r9, operators/spanfill; == gapfill-then-kernel,
     # tests/test_spanfill.py)
-    e = eigen_rollup(_events_1m(spark, sf_dir), "1m", fill="zero")
+    e = eigen_rollup(_events_1m(spark, sf_dir), "1m")
     return e.select(
         "source", "span_s", "n_epochs",
         F.round("lam", 6).cast("double").alias("lam"),
@@ -1988,7 +1988,7 @@ def nl_phase_fit_1m(spark, sf_dir):
     recovery / batch==single / loop-oracle goldens in tests/test_nlfit.py."""
     from .operators.nlfit import nlfit_rollup
 
-    r = nlfit_rollup(_events_1m(spark, sf_dir), "1m", fill="zero")
+    r = nlfit_rollup(_events_1m(spark, sf_dir), "1m")
     return r.select(
         "source", "span_s", "n_epochs", "n_pairs",
         F.round("s_grid", 6).cast("double").alias("s_grid"),
@@ -2009,7 +2009,7 @@ def eigen_mle_1m(spark, sf_dir):
     low-coherence superiority over EVD)."""
     from .operators.eigen import eigen_rollup
 
-    e = eigen_rollup(_events_1m(spark, sf_dir), "1m", method="mle", fill="zero")
+    e = eigen_rollup(_events_1m(spark, sf_dir), "1m", method="mle")
     return e.select(
         "source", "span_s", "n_epochs",
         F.round("lam", 6).cast("double").alias("lam"),
@@ -2041,7 +2041,7 @@ def eigen_complex_1m(spark, sf_dir):
 def compress_chunks(spark, sf_dir):
     from .operators.compress import compress_rollup
 
-    ch = compress_rollup(_events_1m(spark, sf_dir), "1m", value_col="rate", fill="zero")
+    ch = compress_rollup(_events_1m(spark, sf_dir), "1m", value_col="rate")
     return ch.select(
         "source", "span_s", "n_points",
         F.length("ts_blob").alias("ts_bytes"),
@@ -2068,7 +2068,7 @@ def codec_roundtrip(spark, sf_dir):
     lossless through the whole Spark path, not just in unit tests."""
     from .operators.compress import compress_rollup, decompress_chunks
 
-    chunks = compress_rollup(_events_1m(spark, sf_dir), "1m", value_col="rate", fill="zero")
+    chunks = compress_rollup(_events_1m(spark, sf_dir), "1m", value_col="rate")
     pts = decompress_chunks(chunks)
     return pts.select(
         "source", "epoch_s", F.round("val", 6).cast("double").alias("rate")

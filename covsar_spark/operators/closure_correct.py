@@ -34,7 +34,7 @@ Engine graft (real-valued token series, one "pixel" = one (source, span)):
                  coherence-derived phase covariance, closures.py:208-245,
                  which needs complex coherence we don't have).
 
-One shuffle: groupBy(source, span-bucket) -> applyInPandas; the design
+One shuffle: the span-kernel skeleton (operators/spanfill.py); the design
 matrices A / A-dagger / adjacency depend only on N and are lru_cached per
 Python worker (constant hoisting, closure_inten.py:178-191). Stacks are
 capped at ``max_epochs`` epochs per span exactly like the reference's
@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 
 from ..functions.stats import chi2_sf
 from .closure import design_matrix
-from .spanbucket import with_span_bucket
+from .spanfill import dense_span_kernel, observed_only
 
 MAX_EPOCHS = 20  # files[:20] analogue (covsar/closure_inten.py:73)
 
@@ -289,25 +289,29 @@ def closure_correct(
     tier: str,
     value_col: str = "token_count",
     max_epochs: int = MAX_EPOCHS,
-    spans_per_bucket: int = 64,
     emit_pairs: bool = True,
     fill: str | None = None,
 ) -> DataFrame:
-    """Grouped correction kernel: one span row per (source, eigen-span) with
-    fit/drift/chi2 stats (+ pair arrays when ``emit_pairs``). One shuffle,
-    span-bucketed like operators/eigen.eigen_rollup (many spans per Arrow
-    batch). ``emit_pairs=False`` keeps the P-sized arrays out of the Arrow
-    return path when only the stats are consumed (~190 doubles x 3 per span
-    saved).
+    """Span correction kernel: one span row per (source, eigen-span) with
+    fit/drift/chi2 stats (+ pair arrays when ``emit_pairs``), on the
+    span-kernel skeleton (operators/spanfill.py: one shuffle, many spans
+    per Arrow batch). ``emit_pairs=False`` keeps the P-sized arrays out of
+    the Arrow return path when only the stats are consumed (~190 doubles x
+    3 per span saved).
 
-    ``fill="zero"``: take the RAW (sparse) rollup and zero-fill each span's
-    dense grid INSIDE the kernel via the sentinel prep (operators/spanfill)
-    — output-identical to feeding `gapfill(rollup, tier, "zero")` here
-    (pinned in tests/test_spanfill.py) but only observed rows shuffle
-    instead of the dense grid (21x fewer at sf0.1's gap fraction)."""
+    ``fill=None`` corrects each span's OBSERVED epochs (`observed_only`; a
+    span with no observed row emits nothing). ``fill="zero"`` corrects the
+    span's zero-filled dense grid instead — output-identical to feeding
+    `gapfill(rollup, tier, "zero")` here (tests/test_spanfill.py) while only
+    observed rows shuffle. Both modes cap each span at ``max_epochs``."""
+    if fill not in (None, "zero"):
+        raise ValueError(f"only fill=None or 'zero' is kernel-fillable, got {fill!r}")
     schema = _SPAN_SCHEMA if emit_pairs else _STATS_SCHEMA
 
-    def rows_from(keys, results) -> pd.DataFrame:
+    def batch_fn(keys, grids, values, observed):
+        if fill is None:
+            keys, values = observed_only(keys, values, observed)
+        results = correct_span_batch([v[:max_epochs] for v in values[0]])
         if emit_pairs:
             rows = [
                 (
@@ -330,29 +334,7 @@ def closure_correct(
             ]
         return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    if fill is not None:
-        from .spanfill import dense_span_kernel
-
-        def batch_fn(keys, grids, values, observed):
-            return rows_from(keys, correct_span_batch([v[:max_epochs] for v in values[0]]))
-
-        return dense_span_kernel(
-            rollup, tier, [(value_col, "double", 0.0)], batch_fn, schema, fill=fill
-        )
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort")
-            keys.append((src, sp))
-            series.append(g["val"].to_numpy(np.float64)[:max_epochs])
-        return rows_from(keys, correct_span_batch(series))
-
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, schema)
+    return dense_span_kernel(rollup, tier, [(value_col, "double", 0.0)], batch_fn, schema)
 
 
 def corrected_pairs(span_rows: DataFrame) -> DataFrame:

@@ -140,7 +140,7 @@ def lttb(
         out["sel_rank"] = np.arange(len(idx), dtype=np.int64)
         return out
 
-    # pinned-width kernel exchange (see operators/spanbucket.py): AQE sizes
+    # pinned-width kernel exchange (see operators/spanfill.py): AQE sizes
     # by shuffle bytes and would run every series' LTTB pick in one task
     n_part = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     res = src.repartition(n_part, *gcols).groupBy(*gcols).applyInPandas(pick, out_schema)

@@ -29,10 +29,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..schemas import EIGEN_P, EIGEN_SCHEMA
-from .spanbucket import with_span_bucket
+from .spanfill import dense_span_kernel, observed_only
 
 _GAUGE_EPS = 1e-12
 
@@ -212,76 +211,42 @@ def eigen_rollup(
     tier: str,
     p: int = EIGEN_P,
     value_col: str = "token_count",
-    spans_per_bucket: int = 64,
     method: str = "evd",
-    fill: str | None = None,
 ) -> DataFrame:
     """Per-(source, eigen-span) linked eigenpair of the lag-cov Gram.
 
-    ``fill="zero"``: zero-fill the dense grid INSIDE the kernel from the
-    raw rollup (operators/spanfill) — output-identical to passing
-    `gapfill(rollup, tier, "zero")` (tests/test_spanfill.py) with only
-    observed rows shuffled.
+    Input: a tier rollup, raw or gap-filled. Each span's dense grid is
+    zero-filled INSIDE the kernel (operators/spanfill) — output-identical
+    to passing `gapfill(rollup, tier, "zero")`, and on a gap-filled tier of
+    any policy the fill changes nothing, since `gapfill` emits the full
+    lattice (tests/test_spanfill.py). One shuffle of the observed rows; each
+    Arrow batch carries many spans and the kernel runs ONE batched eigh per
+    series length.
 
     ``method`` mirrors the reference's EIG|MLE|NN dispatch
     (covsar/closure_inten.py:502-520): 'evd' = dominant eigenvector of G
     (covsar/library.py:113-146); 'mle' = EMI — bottom eigenvector of
     |C|^-1 ∘ C (see `emi_link`); the NN form lives in
-    windowfns.phase_cumprod. Same grouped batch either way — MLE adds one
+    windowfns.phase_cumprod. Same batch either way — MLE adds one
     batched inverse + eigh, no extra shuffle.
-
-    Input: a (preferably gap-filled) tier rollup. One shuffle, hashed on
-    (source, span-bucket): grouping per individual span would mean one Arrow
-    round-trip per tiny group, so ``spans_per_bucket`` CONSECUTIVE spans
-    share a bucket — each Python-side frame carries many spans of one source
-    and the kernel runs ONE batched eigh per series length. Group size is
-    bounded by construction (spans_per_bucket x span/tier rows ≈ 3.8k for
-    1m) INDEPENDENT of retention horizon, and the bucket COUNT grows with
-    the data instead (round-3 verdict: a fixed modulo-32 bucketing grew
-    ~160k-row groups at a 10-year horizon and produced 32x tiny groups for
-    short sources).
     """
     if method not in ("evd", "mle"):
         raise ValueError(f"method must be 'evd' or 'mle', got {method!r}")
 
-    def rows_from(keys, series) -> pd.DataFrame:
-        res = lagcov_eig_batch(series, p, method)
+    def batch_fn(keys, grids, values, observed):
+        res = lagcov_eig_batch(values[0], p, method)
         return pd.DataFrame(
             {
                 "source": [k[0] for k in keys],
                 "span_s": [k[1] for k in keys],
-                "n_epochs": [k[2] for k in keys],
+                "n_epochs": [len(g) for g in grids],
                 "lam": [r[0] for r in res],
                 "tc": [r[1] for r in res],
                 "eig": [r[2] for r in res],
             }
         )
 
-    if fill is not None:
-        from .spanfill import dense_span_kernel
-
-        def batch_fn(keys, grids, values, observed):
-            return rows_from([(s, sp, len(g)) for (s, sp), g in zip(keys, grids)], values[0])
-
-        return dense_span_kernel(
-            rollup, tier, [(value_col, "double", 0.0)], batch_fn, EIGEN_SCHEMA, fill=fill
-        )
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one pandas frame may hold MANY (source, span) groups when keys are
-        # co-partitioned; groupby locally and run one batched eigh per length
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort")
-            keys.append((src, sp, len(g)))
-            series.append(g["val"].to_numpy(np.float64))
-        return rows_from(keys, series)
-
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, EIGEN_SCHEMA)
+    return dense_span_kernel(rollup, tier, [(value_col, "double", 0.0)], batch_fn, EIGEN_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -357,30 +322,20 @@ def eigen_complex_rollup(
     p: int = EIGEN_P,
     re_col: str = "re",
     im_col: str = "im",
-    spans_per_bucket: int = 64,
 ) -> DataFrame:
-    """Per-(source, span) complex phase linking over (re, im) columns — the
-    same single-shuffle span-bucketed plan as the real `eigen_rollup`."""
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket,
-        F.col(re_col).cast("double").alias("re"),
-        F.col(im_col).cast("double").alias("im"),
-    )
+    """Per-(source, span) complex phase linking over (re, im) columns on
+    the same span-kernel skeleton as the real `eigen_rollup`, over each
+    span's OBSERVED epochs only (`spanfill.observed_only`): a span with no
+    observed row emits nothing."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort")
-            keys.append((src, sp, len(g)))
-            series.append(
-                g["re"].to_numpy(np.float64) + 1j * g["im"].to_numpy(np.float64)
-            )
-        res = lagcov_eig_complex_batch(series, p)
+    def batch_fn(keys, grids, values, observed):
+        keys, (re, im) = observed_only(keys, values, observed)
+        res = lagcov_eig_complex_batch([r + 1j * i for r, i in zip(re, im)], p)
         return pd.DataFrame(
             {
                 "source": [k[0] for k in keys],
                 "span_s": [k[1] for k in keys],
-                "n_epochs": [k[2] for k in keys],
+                "n_epochs": [len(r) for r in re],
                 "lam": [r[0] for r in res],
                 "tc": [r[1] for r in res],
                 "eig_re": [r[2].real.copy() for r in res],
@@ -388,4 +343,5 @@ def eigen_complex_rollup(
             }
         )
 
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, EIGEN_COMPLEX_SCHEMA)
+    payload = [(re_col, "double", 0.0), (im_col, "double", 0.0)]
+    return dense_span_kernel(rollup, tier, payload, batch_fn, EIGEN_COMPLEX_SCHEMA)

@@ -16,10 +16,10 @@ Engine graft (same data model as closure_correct.py): one "pixel" = one
            pair phase, wrapped onto the unit circle)
 and the kernel estimates the scalar coupling s per span.
 
-Scale shape: identical to eigen_rollup — ONE shuffle hashed on
-(source, span-bucket), each Arrow group carries many spans, and all spans
-of one pair-count run through a single fully-vectorized grid + masked
-Gauss-Newton pass (no per-span Python once grouped). Grid cost is
+Scale shape: identical to eigen_rollup — the span-kernel skeleton
+(operators/spanfill.py), ONE shuffle, each Arrow batch carries many spans,
+and all spans of one pair-count run through a single fully-vectorized grid
++ masked Gauss-Newton pass (no per-span Python once batched). Grid cost is
 O(B x P x N) elementwise; GN iterations update only not-yet-converged rows.
 """
 
@@ -28,9 +28,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .spanbucket import with_span_bucket
+from .spanfill import dense_span_kernel
 
 _EPS = 1e-12
 
@@ -112,50 +111,29 @@ def nlfit_rollup(
     rollup: DataFrame,
     tier: str,
     value_col: str = "token_count",
-    spans_per_bucket: int = 64,
     max_epochs: int = 12,
-    fill: str | None = None,
 ) -> DataFrame:
     """Per-(source, eigen-span) nonlinear fit of the pair-phase model.
 
-    Same single-shuffle span-bucket grouping as eigen_rollup; inside each
-    Arrow group, spans are re-grouped by epoch count so every distinct pair
-    count runs ONE vectorized grid + Gauss-Newton pass. Spans are capped at
-    ``max_epochs`` epochs (C(12,2)=66 pairs) exactly like the reference's
-    per-pixel stack cap.
-
-    ``fill="zero"``: in-kernel dense-grid zero fill from the raw rollup
-    (operators/spanfill; output-identical, tests/test_spanfill.py).
+    Same span-kernel skeleton as eigen_rollup: each span's dense grid is
+    zero-filled INSIDE the kernel from a raw or gap-filled rollup
+    (output-identical to fitting `gapfill(rollup, tier, "zero")`; on a
+    gap-filled tier the fill changes nothing, tests/test_spanfill.py). Spans
+    are re-grouped by epoch count so every distinct pair count runs ONE
+    vectorized grid + Gauss-Newton pass, and are capped at ``max_epochs``
+    epochs (C(12,2)=66 pairs) exactly like the reference's per-pixel stack
+    cap.
     """
-    if fill is not None:
-        from .spanfill import dense_span_kernel
 
-        def batch_fn(keys, grids, values, observed):
-            return _nlfit_rows(keys, [v[:max_epochs] for v in values[0]])
+    def batch_fn(keys, grids, values, observed):
+        return _nlfit_rows(keys, [v[:max_epochs] for v in values[0]])
 
-        return dense_span_kernel(
-            rollup, tier, [(value_col, "double", 0.0)], batch_fn, NLFIT_SCHEMA, fill=fill
-        )
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort").head(max_epochs)
-            keys.append((src, sp))
-            series.append(g["val"].to_numpy(np.float64))
-        return _nlfit_rows(keys, series)
-
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, NLFIT_SCHEMA)
+    return dense_span_kernel(rollup, tier, [(value_col, "double", 0.0)], batch_fn, NLFIT_SCHEMA)
 
 
 def _nlfit_rows(keys, series) -> pd.DataFrame:
-    """Shared row builder for both nlfit paths (relational-fill and
-    in-kernel-fill): one vectorized grid + Gauss-Newton pass per distinct
-    epoch count."""
+    """nlfit rows from per-span series: one vectorized grid + Gauss-Newton
+    pass per distinct epoch count."""
     out = {
         "source": [], "span_s": [], "n_epochs": [], "n_pairs": [],
         "s_grid": [], "s_fit": [], "n_iter": [], "resid_l1": [],

@@ -176,18 +176,14 @@ def refresh_tier_table(
     recomputed = rollup_fn(sel)
 
     merged = kept.unionByName(recomputed).withColumn("day", utc_day())
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("day", *keys)
-            .sortWithinPartitions(*keys, "epoch_s")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.repartition("day", *keys)
+        .sortWithinPartitions(*keys, "epoch_s")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(path)
+    )
     rows = spark.read.parquet(path).filter(F.col("day").isin(dirty_days)).count()
     dirty.unpersist()
     # re-arm the downsample-retention policy for repaired days: the rewrite

@@ -1,33 +1,41 @@
 """The span-kernel skeleton: zero-fill INSIDE the kernel, one shuffle.
 
 Every per-(source, span) kernel — the tier kernel (eigen + codecs + dense
-points), closure correction, eigen, nonlinear fit, chunk compression —
-runs on this one skeleton instead of the relational chain::
-
-    gapfill(rollup, tier, "zero")  ->  with_span_bucket  ->  applyInPandas
-
-which materializes the DENSE per-source calendar grid (a grid join + its
-exchange) and then shuffles every dense row — at sf0.1 the 100k-row events
-rollup explodes to a 2.1M-row dense grid (21x) before the kernel shuffle.
-Here only observed rows + one sentinel per span shuffle (move small rows,
-manufacture the dense form where it is consumed):
+points), closure correction, real and complex eigen, nonlinear fit, chunk
+compression — runs on this one skeleton. The relational alternative,
+`gapfill(rollup, tier, "zero")` followed by a grouped kernel, materializes
+the DENSE per-source calendar grid (a grid join + its exchange) and then
+shuffles every dense row — at sf0.1 the 100k-row events rollup explodes to
+a 2.1M-row dense grid (21x) before the kernel shuffle. Here only observed
+rows + one sentinel per span shuffle (move small rows, manufacture the
+dense form where it is consumed):
 
 - `sentinel_union_prep`: sentinels (one row per (source, span) carrying the
   source's [lo, hi] grid bounds) UNION the observed rollup rows, ONE
   repartition on (source, span), sorted so each span group arrives
   contiguous with its sentinel first.
 - `span_batches`: the carry loop — a span group split across Arrow batch
-  boundaries is carried whole into the next batch.
+  boundaries is carried whole into the next batch. Per-task state is one
+  Arrow batch plus at most one carried span, whatever the retention horizon.
 - `fill_span`: one span's dense reindex (observed values verbatim, each
   payload column's own gap value elsewhere, plus the observed mask).
 - `fill_groups` / `dense_span_kernel`: the column-major batch handed to a
   caller's ``batch_fn`` inside one mapInPandas.
+- `observed_only`: the observed-epochs view of such a batch, for kernels
+  that read only observed rows (closure correction, complex eigen).
 
-Equality obligations: for every kernel, `op(gapfill(roll, tier, "zero"),
-...)` == `op(roll, ..., fill="zero")` EXACTLY — same grid (the per-source
-[lo, hi] lattice clipped to each span), same series values, same epoch
-order (tests/test_spanfill.py, tests/test_tier_kernel.py); the carry loop
-is batch-boundary invariant (tests/test_properties.py).
+Precondition: ``epoch_s`` lies on the tier lattice and is unique per
+source, since `fill_span` scatters each row to grid slot
+``(epoch_s - grid[0]) // tier_s``. Every caller passes a tier rollup or a
+`gapfill` output, which satisfy it.
+
+Equality obligations: `op(roll)` == `op(gapfill(roll, tier, "zero"))` for
+every zero-filling kernel — same grid (the per-source [lo, hi] lattice
+clipped to each span), same series values, same epoch order
+(tests/test_spanfill.py, tests/test_tier_kernel.py). `gapfill` emits the
+full lattice under every policy, so zero-fill on an already-filled tier is
+the identity. The carry loop is batch-boundary invariant
+(tests/test_properties.py, tests/test_spanfill.py).
 """
 
 from __future__ import annotations
@@ -52,7 +60,17 @@ def sentinel_union_prep(
 ) -> tuple[DataFrame, int, int]:
     """(prep frame, tier_s, span): sentinels ∪ observed rows, repartitioned
     on (source, span_s) and sorted (source, span_s, is_sentinel DESC,
-    epoch_s) so each span group arrives contiguous with its sentinel first."""
+    epoch_s) so each span group arrives contiguous with its sentinel first.
+
+    The explicit repartition pins the kernel exchange at the configured
+    shuffle-partition count: a REPARTITION_BY_NUM exchange is exempt from
+    AQE partition coalescing. Without such a pin AQE sized the kernel stage
+    by shuffle BYTES — a few MB of rolled-up keys — and collapsed it to ONE
+    partition, serializing the entire Python kernel into a single task
+    (measured: eigen_complex_1m ran its ~3k span eigendecompositions in one
+    1.0-1.3 s task, 31 cores idle). AQE cannot see per-row Python CPU; for
+    an opaque span kernel the configured width is the right prior at every
+    scale."""
     tier_s = TIERS[tier]
     span = EIGEN_SPAN[tier]
     n_part = int(rollup.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -168,26 +186,38 @@ def fill_groups(
     return keys, grids, values, observed
 
 
+def observed_only(
+    keys: list, values: list[list[np.ndarray]], observed: list[np.ndarray]
+) -> tuple[list, list[list[np.ndarray]]]:
+    """`fill_groups` output -> (keys, values) of the spans with at least one
+    observed epoch, each payload column's series cut to its observed epochs
+    in epoch order (``v[o]``). A span with no observed row is dropped, as a
+    groupBy over the observed rows would never see it."""
+    keep = [i for i, o in enumerate(observed) if o.any()]
+    return [keys[i] for i in keep], [[col[i][observed[i]] for i in keep] for col in values]
+
+
 def dense_span_kernel(
     rollup: DataFrame,
     tier: str,
     payload: Payload,
     batch_fn: Callable[..., pd.DataFrame],
     schema,
-    fill: str = "zero",
 ) -> DataFrame:
     """One-shuffle zero-filled span kernel: ``batch_fn(keys, grids, values,
     observed)`` receives every complete span group of a batch (see
     `fill_groups`) and returns the output rows as a pandas frame matching
-    ``schema``. Only the zero policy is kernel-fillable: ffill/linear need
-    cross-span continuity per source, which a span-partitioned kernel
-    cannot see (those use operators/gapfill.py)."""
-    if fill != "zero":
-        raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
+    ``schema``; an empty frame (a batch of `observed_only` gap spans, whose
+    empty list columns pandas types as float64) is not yielded. Only the
+    zero policy is kernel-fillable: ffill/linear need cross-span continuity
+    per source, which a span-partitioned kernel cannot see (those use
+    operators/gapfill.py)."""
     prep, tier_s, span = sentinel_union_prep(rollup, tier, payload)
 
     def kernel(frames):
         for pdf in span_batches(frames):
-            yield batch_fn(*fill_groups(pdf, tier_s, span, payload))
+            out = batch_fn(*fill_groups(pdf, tier_s, span, payload))
+            if len(out):
+                yield out
 
     return prep.mapInPandas(kernel, schema)

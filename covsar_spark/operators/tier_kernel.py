@@ -24,7 +24,7 @@ fed to eigh is the same canonical zero-filled, epoch-sorted grid.
 
 ``closure=True`` also runs the closure correction's stats
 (operators/closure_correct.correct_span_batch) on each span's OBSERVED
-token counts — the raw-rollup series the grouped `closure_correct` reads,
+token counts — the raw-rollup series `closure_correct(fill=None)` reads,
 epoch-ordered and capped at MAX_EPOCHS — and emits them as ``c_``-prefixed
 columns of the same span rows, so `run_tiers(with_closure=True)` needs no
 second shuffle or Python pass over the rollup. `closure_stats` recovers
@@ -160,7 +160,7 @@ def split_outputs(k: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
 
 def closure_stats(k: DataFrame) -> DataFrame:
     """``closure=True`` kernel output -> the `closure_correct.span_stats`
-    frame. An all-gap span has no observed row, so the grouped operator
+    frame. An all-gap span has no observed row, so `closure_correct`
     emits no row for it; drop it here too."""
     return k.filter(F.col("c_n_epochs") > 0).select(
         "source", "span_s", *(F.col(f.name).alias(f.name[2:]) for f in CLOSURE_FIELDS)

@@ -241,7 +241,7 @@ def _grouped_kernel(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
     exempt from AQE coalescing — AQE sizes stages by shuffle BYTES and
     collapsed these pixel-kernel stages to one partition, serializing
     every tile/raster solve into a single task (same finding as
-    operators/spanbucket.py; AQE cannot see per-row Python CPU)."""
+    operators/spanfill.sentinel_union_prep; AQE cannot see per-row Python CPU)."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return df.repartition(n_part, *keys).groupBy(*keys).applyInPandas(fn, schema)
 

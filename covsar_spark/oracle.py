@@ -125,7 +125,7 @@ def closure_stats(
     """Single-threaded golden for the closure-correction span stats: the
     SAME pure kernel (`closure_correct.correct_span`) over pandas groups, so
     Spark-vs-oracle comparison isolates the distributed plumbing (grouping,
-    bucketing, ordering, batching)."""
+    ordering, batching)."""
     from .operators.closure_correct import correct_span
     from .schemas import EIGEN_SPAN
 

@@ -3,7 +3,8 @@
 quality -> partitioned sink), re-expressed as:
 
     tokens -> event time -> 1m rollup -> cascade 1h/1d
-           -> gap-fill (zero) -> eigen kernel per tier
+           -> tier kernel per tier (zero gap-fill + eigen + codec in one
+              shuffle; other fill policies: gap-fill -> eigen/codec)
            -> compressed chunk tables
 
 One raw scan; every tier derives from the previous (continuous aggregates);
@@ -34,7 +35,10 @@ def run_tiers(
     persist_fused: bool = True,
     horizon_s: int | None = None,
 ) -> dict[str, dict[str, DataFrame]]:
-    """Returns per tier: {"rollup", "filled", "eigen"?, "chunks"?, "closure"?}."""
+    """Returns per tier: {"rollup", "filled", "eigen"?, "chunks"?, "closure"?},
+    plus the kernel's span rows as "fused" on the zero-fill fast path
+    (``policy="zero"`` with eigen), which always yields the chunks too;
+    ``with_chunks`` matters only on the relational path."""
     from ..schemas import HORIZON_S
 
     ts = with_event_time(tokens, horizon_s or HORIZON_S)
@@ -45,7 +49,7 @@ def run_tiers(
         if persist:
             roll = roll.persist(StorageLevel.MEMORY_AND_DISK)
         d: dict[str, DataFrame] = {"rollup": roll}
-        if policy == "zero" and with_eigen and with_chunks:
+        if policy == "zero" and with_eigen:
             # single-shuffle fast path: gap-fill + eigen + codec in one
             # kernel pass (operators/tier_kernel.py); bit-identical to the
             # relational path (tests/test_tier_kernel.py)
@@ -81,7 +85,7 @@ def run_tiers(
             if with_chunks:
                 d["chunks"] = compress_rollup(filled, tier)
             if with_closure:
-                # the grouped closure operator (operators/closure_correct.py)
+                # the closure operator (operators/closure_correct.py)
                 # off the same persisted rollup
                 from ..operators.closure_correct import closure_correct, span_stats
 
@@ -95,26 +99,28 @@ def flagship(tokens: DataFrame) -> DataFrame:
     """One DataFrame joining the 1m rollup quality summary with its eigen
     kernel output — the per-window rolled-up points + dominant-mode metrics.
 
-    The persist below is load-bearing: BOTH branches (hourly summary and
-    the eigen kernel) read the gap-filled 1m tier, so without it the
-    calendar-grid join + fill would execute twice in `entry()`'s plan
-    (InMemoryRelation reuse instead; verified in
-    tests/test_plans.py::test_flagship_reuses_filled_tier). ONLY the shared
-    filled tier is cached — run_tiers(persist=True) would also pin the
-    pre-fill rollup (a single-consumer plan here) into executor storage
-    with zero reuse.
+    Both outputs come from ONE tier-kernel pass (the zero-fill fast path of
+    `run_tiers`, the same kernel the benchmark runs): the persist below is
+    load-bearing, because BOTH branches (the hourly summary over the
+    exploded filled tier, and the eigen rows) read the kernel's span rows
+    through `split_outputs`, so without it the kernel's shuffle and Python
+    pass would execute twice in `entry()`'s plan (InMemoryRelation reuse
+    instead; verified in tests/test_plans.py::test_flagship_reuses_filled_tier).
+    ONLY the kernel output is cached — run_tiers(persist=True) would also
+    pin the rollup (a single-consumer plan here) into executor storage with
+    zero reuse.
 
     Cache lifetime is owned by the CALLER: the returned DataFrame's plan
-    references the persisted filled tier, so flagship() cannot unpersist
+    references the persisted kernel output, so flagship() cannot unpersist
     before the caller's action runs. Long-lived sessions issuing repeated
     flagship() calls should `spark.catalog.clearCache()` (or unpersist via
     the plan's InMemoryRelation) between calls to avoid accumulating pinned
     tiers in executor storage."""
-    from pyspark.storagelevel import StorageLevel
+    from ..operators.tier_kernel import split_outputs
 
     tiers = run_tiers(tokens, with_eigen=True, persist=False)
-    filled = tiers["1m"]["filled"].persist(StorageLevel.MEMORY_AND_DISK)
-    eig = tiers["1m"]["eigen"]
+    k = tiers["1m"]["fused"].persist(StorageLevel.MEMORY_AND_DISK)
+    filled, eig, _ = split_outputs(k)
     hourly = filled.groupBy(
         "source", (F.floor(F.col("epoch_s") / 3600) * 3600).cast("long").alias("span_s")
     ).agg(

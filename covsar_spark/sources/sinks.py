@@ -30,19 +30,14 @@ def _day(col: str = "epoch_s") -> F.Column:
 
 
 def _write_partitioned(df: DataFrame, path: str, part_col: str = "day") -> None:
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(part_col, "source")
-            .sortWithinPartitions("source", *[c for c in ("epoch_s", "span_s") if c in df.columns])
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.repartition(part_col, "source")
+        .sortWithinPartitions("source", *[c for c in ("epoch_s", "span_s") if c in df.columns])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(path)
+    )
 
 
 def timeseries_frame(roll: DataFrame, eigen: DataFrame, span: int) -> DataFrame:

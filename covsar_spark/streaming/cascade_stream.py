@@ -76,8 +76,6 @@ def run_cascade_stream(
             b.unpersist()
             return
         sess = b.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # (1) exactly-once 1m append: the batch owns its (day, batch)
             # partitions; day-first layout makes step (2) prune by day
@@ -85,6 +83,7 @@ def run_cascade_stream(
                 b.withColumn("epoch_day", _epoch_day())
                 .withColumn("batch_id", F.lit(int(batch_id)))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("epoch_day", "batch_id")
                 .parquet(tier_1m)
             )
@@ -103,11 +102,11 @@ def run_cascade_stream(
                 cascade_1h_from_1m(full_1m)
                 .withColumn("epoch_day", _epoch_day())
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("epoch_day")
                 .parquet(tier_1h)
             )
         finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             b.unpersist()
 
     run_stream(m1, "append", checkpoint=checkpoint or f"{out_dir}/_checkpoint", foreach_batch=maintain)

@@ -281,7 +281,7 @@ def test_complex_batch_equals_single():
 
 def test_eigen_complex_rollup_matches_single(spark, tiny_cols):
     """Spark plumbing: unit phasors from the 1m rollup's cumulative phase
-    (the phase_cumprod construction) through the grouped kernel equal the
+    (the phase_cumprod construction) through the span kernel equal the
     pure single-series kernel on identically ordered series."""
     from covsar_spark.operators.eigen import eigen_complex_rollup, lagcov_eig_complex
     from covsar_spark.operators.rollup import rollup_tokens, with_event_time

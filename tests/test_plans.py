@@ -165,8 +165,9 @@ def test_minhash_single_shuffle_partial_agg(spark):
 
 
 def test_closure_kernel_single_exchange(spark):
-    """The closure-correction kernel is one span-bucket shuffle + one
-    FlatMapGroupsInPandas — no joins, no extra exchanges."""
+    """The closure-correction kernel runs on the span-kernel skeleton: ONE
+    repartition on (source, span) feeding one sorted MapInPandas — no
+    grouped-map pass, no joins (the sentinel branch is a union)."""
     from covsar_spark.operators.closure_correct import closure_correct
 
     import pandas as pd
@@ -175,9 +176,10 @@ def test_closure_kernel_single_exchange(spark):
         {"source": ["a"] * 10, "epoch_s": [60 * i for i in range(10)], "token_count": range(10)}
     )
     plan = _plan(closure_correct(spark.createDataFrame(pdf), "1m"))
-    assert plan.count("Exchange") == 1
-    assert "FlatMapGroupsInPandas" in plan
-    assert "Join" not in plan
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    assert "MapInPandas" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_tier_kernel_single_exchange(spark, tiny_cols):
@@ -214,9 +216,10 @@ def test_run_tiers_closure_reads_persisted_kernel(spark, tiny_cols):
 
 
 def test_flagship_reuses_filled_tier(spark):
-    """flagship() feeds the gap-filled 1m tier to BOTH the hourly summary
-    and the eigen kernel; the persisted tier must appear as InMemoryRelation
-    so the calendar-grid join + fill execute once, not per consumer."""
+    """flagship() feeds the 1m tier kernel's span rows to BOTH the hourly
+    summary (over the exploded filled tier) and the eigen join; the
+    persisted kernel output must appear as InMemoryRelation so the kernel's
+    shuffle and Python pass execute once, not per consumer."""
     from covsar_spark.plans.pipeline import flagship
 
     tokens = (

@@ -270,3 +270,42 @@ def test_refresh_clears_downsample_marker_and_rearms_policy(spark, split, tmp_pa
     res2 = downsample_tier(spark, path, day2 + 86400, n_out=n_out)
     assert day_name in res2["downsampled_days"]
     assert os.path.exists(marker)
+
+
+def test_partitioned_overwrites_leave_session_conf_alone(spark, split, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is a per-write option: neither the sink
+    writer nor the on-disk refresh sets the session-global overwrite mode
+    (a concurrent job in the same session would otherwise see it flip),
+    the session keeps reading ``static``, and an overwrite of one day still
+    leaves the other day's partition in place."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from covsar_spark.sources.sinks import _write_partitioned
+    from covsar_spark.sources.tables import write_tier
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        keys_set.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+
+    path = str(tmp_path / "sink")
+    two_days = spark.createDataFrame(
+        [("a", 0, 1.0), ("a", 86400, 2.0)], "source string, epoch_s long, v double"
+    ).withColumn("day", F.date_from_unix_date(F.floor(F.col("epoch_s") / 86400).cast("int")))
+    _write_partitioned(two_days, path)
+    _write_partitioned(two_days.filter(F.col("epoch_s") == 0).withColumn("v", F.lit(3.0)), path)
+    back = sorted((r.epoch_s, r.v) for r in spark.read.parquet(path).collect())
+    assert back == [(0, 3.0), (86400, 2.0)]
+
+    all_ts, on_time, late = split
+    tier_path = str(tmp_path / "tier1h")
+    write_tier(rollup_tokens(on_time, "1h"), tier_path, "1h")
+    refresh_tier_table(spark, tier_path, all_ts, late, TIERS["1h"], lambda df: rollup_tokens(df, "1h"))
+
+    assert key not in keys_set
+    assert spark.conf.get(key).lower() == "static"
