@@ -85,10 +85,7 @@ def _read(spark: SparkSession, sf_dir: str, name: str, fanout: bool = False) -> 
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         fan = _FANOUT_MEMO.get(key)
         if fan is None:
-            try:
-                fan = df.rdd.getNumPartitions() * 2 <= n_part
-            except Exception:
-                fan = False
+            fan = df.rdd.getNumPartitions() * 2 <= n_part
             _FANOUT_MEMO[key] = fan
         if fan:
             return df.repartition(n_part)

@@ -14,7 +14,7 @@ are emitted.
 
 ONLY valid for the `zero` fill policy: ffill/linear need cross-span
 continuity per source, which a span-partitioned kernel cannot see — those
-use the relational `operators/gapfill.py` path.
+use the `operators/gapfill.py` operator directly; `run_tiers` runs zero only.
 
 Exactness: output rows must equal the relational gapfill + eigen_rollup +
 compress_rollup results bit-for-bit (tests/test_tier_kernel.py); the series

@@ -4,7 +4,7 @@ quality -> partitioned sink), re-expressed as:
 
     tokens -> event time -> 1m rollup -> cascade 1h/1d
            -> tier kernel per tier (zero gap-fill + eigen + codec in one
-              shuffle; other fill policies: gap-fill -> eigen/codec)
+              shuffle)
            -> compressed chunk tables
 
 One raw scan; every tier derives from the previous (continuous aggregates);
@@ -17,30 +17,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..operators.compress import compress_rollup
-from ..operators.eigen import eigen_rollup
-from ..operators.gapfill import gapfill
 from ..operators.rollup import cascade, rollup_tokens, with_event_time
+from ..operators.tier_kernel import closure_stats, split_outputs, tier_kernel
 from ..schemas import TIERS
 
 
 def run_tiers(
     tokens: DataFrame,
-    policy: str = "zero",
     with_eigen: bool = True,
-    with_chunks: bool = False,
+    with_chunks: bool = True,
     with_filled: bool = True,
     with_closure: bool = False,
     persist: bool = True,
     persist_fused: bool = True,
     horizon_s: int | None = None,
 ) -> dict[str, dict[str, DataFrame]]:
-    """Returns per tier: {"rollup", "filled", "eigen"?, "chunks"?, "closure"?},
-    plus the kernel's span rows as "fused" on the zero-fill fast path
-    (``policy="zero"`` with eigen), which always yields the chunks too;
-    ``with_chunks`` matters only on the relational path."""
+    """Returns per tier: {"rollup", "fused", "eigen", "chunks", "filled"?,
+    "closure"?}, where "fused" is the tier kernel's span rows.
+
+    The tier kernel (zero gap-fill + eigen + codec in one shuffle,
+    operators/tier_kernel.py) is the only path; other fill policies compose
+    the public `gapfill` operator with `eigen_rollup` / `compress_rollup`
+    directly. The kernel always yields the eigen and chunk tables, so
+    ``with_eigen`` and ``with_chunks`` are accepted only as ``True``, for
+    callers that still name them."""
     from ..schemas import HORIZON_S
 
+    if not (with_eigen and with_chunks):
+        raise ValueError("the tier kernel always yields eigen and chunks")
     ts = with_event_time(tokens, horizon_s or HORIZON_S)
     out: dict[str, dict[str, DataFrame]] = {}
     finer: DataFrame | None = None
@@ -48,92 +52,42 @@ def run_tiers(
         roll = rollup_tokens(ts, tier) if finer is None else cascade(finer, tier)
         if persist:
             roll = roll.persist(StorageLevel.MEMORY_AND_DISK)
-        d: dict[str, DataFrame] = {"rollup": roll}
-        if policy == "zero" and with_eigen:
-            # single-shuffle fast path: gap-fill + eigen + codec in one
-            # kernel pass (operators/tier_kernel.py); bit-identical to the
-            # relational path (tests/test_tier_kernel.py)
-            from ..operators.tier_kernel import closure_stats, split_outputs, tier_kernel
-
-            k = tier_kernel(roll, tier, emit_points=with_filled, closure=with_closure)
-            if persist and persist_fused:
-                # only when several outputs are materialized separately —
-                # a single consumer (e.g. chunk write) should stream through
-                k = k.persist(StorageLevel.MEMORY_AND_DISK)
-            d["fused"] = k
-            if with_filled:
-                d["filled"], d["eigen"], d["chunks"] = split_outputs(k)
-            else:
-                d["eigen"] = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
-                d["chunks"] = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
-            if with_closure:
-                # the defining CovSAR step (per-(source, eigen-span) closure
-                # evaluation + fit + least-norm correction + drift/chi2
-                # stats) ran inside the kernel on each span's observed
-                # series: a filter-and-select over its span rows, no second
-                # shuffle or Python pass over the rollup
-                d["closure"] = closure_stats(k)
+        k = tier_kernel(roll, tier, emit_points=with_filled, closure=with_closure)
+        if persist and persist_fused:
+            # only when several outputs are materialized separately —
+            # a single consumer (e.g. chunk write) should stream through
+            k = k.persist(StorageLevel.MEMORY_AND_DISK)
+        d: dict[str, DataFrame] = {"rollup": roll, "fused": k}
+        if with_filled:
+            d["filled"], d["eigen"], d["chunks"] = split_outputs(k)
         else:
-            filled = gapfill(roll, tier, policy)
-            if persist:
-                # multiple consumers branch from the gap-filled tier —
-                # without this the grid join + fill windows re-execute each
-                filled = filled.persist(StorageLevel.MEMORY_AND_DISK)
-            d["filled"] = filled
-            if with_eigen:
-                d["eigen"] = eigen_rollup(filled, tier)
-            if with_chunks:
-                d["chunks"] = compress_rollup(filled, tier)
-            if with_closure:
-                # the closure operator (operators/closure_correct.py)
-                # off the same persisted rollup
-                from ..operators.closure_correct import closure_correct, span_stats
-
-                d["closure"] = span_stats(closure_correct(roll, tier, emit_pairs=False))
+            d["eigen"] = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
+            d["chunks"] = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
+        if with_closure:
+            # the defining CovSAR step (per-(source, eigen-span) closure
+            # evaluation + fit + least-norm correction + drift/chi2
+            # stats) ran inside the kernel on each span's observed
+            # series: a filter-and-select over its span rows, no second
+            # shuffle or Python pass over the rollup
+            d["closure"] = closure_stats(k)
         out[tier] = d
         finer = roll
     return out
 
 
 def flagship(tokens: DataFrame) -> DataFrame:
-    """One DataFrame joining the 1m rollup quality summary with its eigen
-    kernel output — the per-window rolled-up points + dominant-mode metrics.
-
-    Both outputs come from ONE tier-kernel pass (the zero-fill fast path of
-    `run_tiers`, the same kernel the benchmark runs): the persist below is
-    load-bearing, because BOTH branches (the hourly summary over the
-    exploded filled tier, and the eigen rows) read the kernel's span rows
-    through `split_outputs`, so without it the kernel's shuffle and Python
-    pass would execute twice in `entry()`'s plan (InMemoryRelation reuse
-    instead; verified in tests/test_plans.py::test_flagship_reuses_filled_tier).
-    ONLY the kernel output is cached — run_tiers(persist=True) would also
-    pin the rollup (a single-consumer plan here) into executor storage with
-    zero reuse.
-
-    Cache lifetime is owned by the CALLER: the returned DataFrame's plan
-    references the persisted kernel output, so flagship() cannot unpersist
-    before the caller's action runs. Long-lived sessions issuing repeated
-    flagship() calls should `spark.catalog.clearCache()` (or unpersist via
-    the plan's InMemoryRelation) between calls to avoid accumulating pinned
-    tiers in executor storage."""
-    from ..operators.tier_kernel import split_outputs
-
-    tiers = run_tiers(tokens, with_eigen=True, persist=False)
-    k = tiers["1m"]["fused"].persist(StorageLevel.MEMORY_AND_DISK)
-    filled, eig, _ = split_outputs(k)
-    hourly = filled.groupBy(
-        "source", (F.floor(F.col("epoch_s") / 3600) * 3600).cast("long").alias("span_s")
-    ).agg(
-        F.sum("token_count").alias("token_count"),
-        F.sum("n_docs").alias("n_docs"),
-        F.sum(F.col("filled").cast("long")).alias("n_filled"),
-    )
-    return hourly.join(eig, ["source", "span_s"], "inner").select(
+    """The 1m tier's per-window rolled-up points + dominant-mode metrics:
+    one select over the tier kernel's span rows (the kernel `run_tiers`
+    and the benchmark run). `EIGEN_SPAN["1m"]` is one hour, so each span
+    row is one hourly window, and its point arrays hold that hour's dense
+    filled series; the window sums are taken over those arrays."""
+    k = run_tiers(tokens, persist=False)["1m"]["fused"]
+    return k.select(
         "source",
         "span_s",
-        "token_count",
-        "n_docs",
-        "n_filled",
+        F.aggregate("p_tok", F.lit(0).cast("long"), lambda a, x: a + x).alias("token_count"),
+        F.aggregate("p_docs", F.lit(0).cast("long"), lambda a, x: a + x).alias("n_docs"),
+        F.size(F.filter("p_filled", lambda x: x)).cast("long").alias("n_filled"),
         "n_epochs",
         "lam",
         "tc",

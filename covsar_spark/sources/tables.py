@@ -16,6 +16,7 @@ source-range scans too.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,7 +27,9 @@ def _has_iceberg(spark: SparkSession) -> bool:
         # missing classes — force real classloading
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")  # noqa: SLF001
         return True
-    except Exception:
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.ClassNotFoundException":
+            raise
         return False
 
 

@@ -215,9 +215,10 @@ def test_eigen_rollup_mle_matches_single(spark, tiny_cols):
 
     span = EIGEN_SPAN["1m"]
     base["span_s"] = (base["epoch_s"] // span) * span
+    by_span = dict(tuple(base.groupby(["source", "span_s"])))
     assert len(got) > 0
     for row in got.itertuples():
-        g = base[(base["source"] == row.source) & (base["span_s"] == row.span_s)]
+        g = by_span[(row.source, row.span_s)]
         x = g.sort_values("epoch_s")["token_count"].to_numpy(np.float64)
         lam, tc, v = lagcov_eig(x, method="mle")
         assert abs(lam - row.lam) < 1e-9

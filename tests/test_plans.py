@@ -215,24 +215,41 @@ def test_run_tiers_closure_reads_persisted_kernel(spark, tiny_cols):
         d[t].unpersist()
 
 
+def _flagship_tokens(spark):
+    return spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("n_chars").cast("long").alias("n_tok"),
+        "source",
+    )
+
+
 def test_flagship_reuses_filled_tier(spark):
-    """flagship() feeds the 1m tier kernel's span rows to BOTH the hourly
-    summary (over the exploded filled tier) and the eigen join; the
-    persisted kernel output must appear as InMemoryRelation so the kernel's
-    shuffle and Python pass execute once, not per consumer."""
+    """flagship() is one select over the 1m tier kernel's span rows: its
+    final AQE plan holds the kernel's one repartition and one MapInPandas,
+    and no join and no cached relation (the hourly sums are taken over the
+    span rows' point arrays, not by exploding and re-grouping them)."""
     from covsar_spark.plans.pipeline import flagship
 
-    tokens = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.col("n_chars").cast("long").alias("n_tok"),
-            "source",
-        )
-    )
-    df = flagship(tokens)
+    df = flagship(_flagship_tokens(spark))
+    assert df.collect()
     plan = _plan(df)
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("REPARTITION_BY_NUM") == 1, final
+    assert final.count("MapInPandas") == 1, final
+    assert "Join" not in final, final
+    assert "InMemoryRelation" not in final and "InMemoryTableScan" not in final, final
+
+
+def test_flagship_leaves_no_cache(spark):
+    """Repeated flagship() calls pin nothing in executor storage: starting
+    from an empty cache, two collected calls leave no persisted RDD."""
+    from covsar_spark.plans.pipeline import flagship
+
+    spark.catalog.clearCache()
+    for _ in range(2):
+        assert flagship(_flagship_tokens(spark)).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
 def test_nearest_point_broadcast_partial_agg(spark):
@@ -559,16 +576,28 @@ def test_heartbeat_coverage_single_exchange(spark):
 
 
 def test_run_tiers_relational_policy_eigen_and_chunks(spark, tiny_cols):
-    """A non-zero fill policy takes the relational path: the eigen and chunk
-    tables both come from the same gap-filled tier, one row per span each."""
+    """A non-zero fill policy composes the operators directly: the eigen and
+    chunk tables both come from the same gap-filled tier, one row per span
+    each. `run_tiers` runs the zero-fill tier kernel only, and refuses what
+    the kernel cannot give."""
+    import pytest
+
+    from covsar_spark.operators.compress import compress_rollup
+    from covsar_spark.operators.eigen import eigen_rollup
+    from covsar_spark.operators.gapfill import gapfill
+    from covsar_spark.operators.rollup import rollup_tokens, with_event_time
     from covsar_spark.plans.pipeline import run_tiers
     from .conftest import cols_to_spark
 
-    d = run_tiers(
-        cols_to_spark(spark, tiny_cols), policy="ffill", with_eigen=True, with_chunks=True,
-        persist=False,
-    )["1m"]
-    assert "fused" not in d
-    eig = d["eigen"].select("source", "span_s", "n_epochs").orderBy("source", "span_s").collect()
-    ch = d["chunks"].select("source", "span_s", "n_points").orderBy("source", "span_s").collect()
+    tokens = cols_to_spark(spark, tiny_cols)
+    filled = gapfill(rollup_tokens(with_event_time(tokens), "1m"), "1m", "ffill")
+    eig = eigen_rollup(filled, "1m").select("source", "span_s", "n_epochs")
+    ch = compress_rollup(filled, "1m").select("source", "span_s", "n_points")
+    eig = eig.orderBy("source", "span_s").collect()
+    ch = ch.orderBy("source", "span_s").collect()
     assert eig and [tuple(r) for r in eig] == [tuple(r) for r in ch]
+    assert len({(r.source, r.span_s) for r in eig}) == len(eig)
+    with pytest.raises(ValueError):
+        run_tiers(tokens, with_eigen=False, persist=False)
+    with pytest.raises(TypeError):
+        run_tiers(tokens, policy="ffill", persist=False)

@@ -370,7 +370,7 @@ def test_composed_stream_pipeline_matches_batch(spark, tmp_path):
     # ---- batch path: the flagship composition over the same tokens ----
     tokens = spark.read.parquet(tok_path).filter(F.col("source") != "zz_flush")
     tiers = run_tiers(
-        tokens, policy="zero", with_eigen=True, with_chunks=True,
+        tokens, with_eigen=True, with_chunks=True,
         with_filled=False, persist=False,
     )["1m"]
 
