@@ -26,12 +26,12 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 def _spark(gc_log: str | None = None):
     from bench import warm_session
-    from covsar_spark.session import get_spark
+    from covsar_spark.session import driver_heap, driver_java_options, get_spark
 
     extra = {}
-    if gc_log:
+    if gc_log:  # the session's own heap options, plus the log
         extra["spark.driver.extraJavaOptions"] = (
-            f"-XX:+UseParallelGC -Xlog:gc*:file={gc_log}:time,uptime"
+            f"{driver_java_options(driver_heap())} -Xlog:gc*:file={gc_log}:time,uptime"
         )
     spark = get_spark("covsar_bench_extra", cores=CPUS, shuffle_partitions=CPUS, extra_conf=extra)
     warm_session(spark, CPUS)

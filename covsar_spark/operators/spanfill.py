@@ -70,7 +70,14 @@ def sentinel_union_prep(
     (measured: eigen_complex_1m ran its ~3k span eigendecompositions in one
     1.0-1.3 s task, 31 cores idle). AQE cannot see per-row Python CPU; for
     an opaque span kernel the configured width is the right prior at every
-    scale."""
+    scale.
+
+    The input is scanned twice when ``rollup`` is not persisted (as in
+    ``flagship()`` and ``entry()``): Catalyst computes the sentinels'
+    per-source min/max(epoch_s) straight from the rollup's input, below its
+    (source, epoch_s) aggregate, so that branch reads the input a second
+    time and hash-exchanges its partial min/max on ``source``. A persisted
+    rollup (``run_tiers(persist=True)``) is read once, by both branches."""
     tier_s = TIERS[tier]
     span = EIGEN_SPAN[tier]
     n_part = int(rollup.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))

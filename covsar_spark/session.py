@@ -21,23 +21,44 @@ def _meminfo_kb() -> dict[str, int]:
         return {}
 
 
-def driver_heap(env: dict | None = None, meminfo: dict[str, int] | None = None) -> tuple[str, bool]:
-    """(driver heap, pre-touch it?). ``$SPARK_DRIVER_MEM`` wins verbatim
-    (always pre-touched). Otherwise the heap is min(16g, 40% of MemTotal),
-    pre-touched only when it fits twice into MemAvailable, so committing
-    the whole heap at startup leaves at least as much for the Python workers
-    and everything else on the host (see the extraJavaOptions comment in
-    get_spark)."""
+def driver_heap(env: dict | None = None, meminfo: dict[str, int] | None = None) -> str:
+    """The driver heap size. ``$SPARK_DRIVER_MEM`` wins verbatim; otherwise
+    min(16g, 40% of MemTotal)."""
     env = os.environ if env is None else env
     if env.get("SPARK_DRIVER_MEM"):
-        return env["SPARK_DRIVER_MEM"], True
+        return env["SPARK_DRIVER_MEM"]
     meminfo = _meminfo_kb() if meminfo is None else meminfo
     total_mb = meminfo.get("MemTotal", 0) // 1024
     if not total_mb:  # no /proc/meminfo: keep the historical default
-        return "16g", True
-    heap_mb = max(1, min(16 << 10, total_mb * 2 // 5))
-    avail_mb = meminfo.get("MemAvailable", 0) // 1024
-    return f"{heap_mb}m", 2 * heap_mb <= avail_mb
+        return "16g"
+    return f"{max(1, min(16 << 10, total_mb * 2 // 5))}m"
+
+
+def driver_java_options(heap: str) -> str:
+    """The driver JVM's options for a fixed heap of ``heap``.
+
+    ParallelGC: G1 inflated executor CPU up to 5x under 8+ concurrent tasks
+    in one local JVM (allocation-heavy shuffle+Arrow paths); ParallelGC cut
+    the flagship wall ~20%.
+
+    -Xms: a heap that grows and shrinks commits fresh pages inside its GC
+    pauses again and again, and on a host that faults pages slowly young
+    GCs became page-fault storms (on a 32-core host one logged 6.3 s young
+    pause was Sys=71 s of kernel page allocation, User=4.9 s of GC). A
+    fixed heap is never shrunk, so each page is faulted in at most once.
+
+    The heap is not pre-touched at start-up: that committed every page of
+    it, although the driver uses far less. On a 4-vCPU, 15.7 GB host with
+    a 2g heap, committing pages on demand cut the peak PSS of the process
+    tree from 2,864 to 1,604 MB on perfbench `ingest` and from 3,257 to
+    2,347 MB on `suite` (medians of 10 and 4 runs) at no extra CPU time,
+    and cut a bare session build's JVM system time from 1.85 to 0.84 s. The
+    pages the driver does use are now faulted in inside its passes and GCs:
+    over one `suite` run the longest young pause went 39 -> 46 ms and the
+    GCs' summed system time 0.04 -> 0.57 s, far from the storm above.
+    Dropping -Xms as well saved no further memory. On a real cluster the
+    analogue is the standard fixed-size executor heap."""
+    return f"-XX:+UseParallelGC -Xms{heap}"
 
 
 def _shuffle_dir() -> str:
@@ -119,7 +140,7 @@ def get_spark(
         )
 
     # fixed driver heap, sized from the host unless $SPARK_DRIVER_MEM overrides
-    driver_mem, pretouch = driver_heap()
+    driver_mem = driver_heap()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -140,28 +161,14 @@ def get_spark(
         # Spark's default LRU of 100 would evict each one before its next
         # use, so every pass would recompile (and re-JIT) all of them
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # the cache key is the generated code text, and by default the class
+        # name in it carries the whole-stage codegen id. AQE numbers a plan's
+        # stages in the order they are planned, which differs from run to
+        # run, so the same pipeline came back under a new name and was
+        # compiled again (6-24 classes in every timed `suite` pass)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", driver_mem)
-        # measured: G1 inflates executor CPU up to 5x under 8+ concurrent
-        # tasks in one local JVM (allocation-heavy shuffle+Arrow paths);
-        # throughput-oriented ParallelGC cut the flagship wall ~20%.
-        # -Xms=: this sandbox faults fresh pages at ~0.5 GB/s, so a growing
-        # heap turned young GCs into page-fault storms (one logged 6.3s
-        # young pause was Sys=71s of kernel page allocation, User=4.9s of
-        # actual GC) that landed on random queries as multi-second spikes.
-        # A FIXED heap pre-touched at startup removes them: an 8-query A/B
-        # read 78.4s (lazy 48g) vs 57.1s (pre-touched 16g) with per-query
-        # spread collapsing (repetition_stats 1.3/3.7/5.3 -> 1.2/0.9/0.9).
-        # 16g default keeps the pre-touch inside normal session startup
-        # (21.6s vs 21.2s); a 48g pre-touch would add ~75s per session.
-        # On a real cluster the analogue is the standard fixed-size
-        # executor heap — lazy heap growth is a local-mode artifact. On a
-        # host too small to commit the whole heap up front (driver_heap)
-        # the heap stays fixed but is touched lazily.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-XX:+UseParallelGC -Xms{driver_mem}"
-            + (" -XX:+AlwaysPreTouch" if pretouch else ""),
-        )
+        .config("spark.driver.extraJavaOptions", driver_java_options(driver_mem))
         # local mode: shuffle through tmpfs when present (a real cluster sets
         # its own local dirs; this only affects the sandbox benchmarks)
         .config("spark.local.dir", _shuffle_dir())

@@ -97,7 +97,7 @@ GETSPARK = {
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
 }
-PLAIN = {"spark.driver.memory": driver_heap()[0]}
+PLAIN = {"spark.driver.memory": driver_heap()}
 
 
 def variants() -> dict[str, dict]:

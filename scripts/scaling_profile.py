@@ -51,7 +51,7 @@ spark = (
     .appName(f"scaling_profile_{cores}")
     .config("spark.sql.shuffle.partitions", str(cores * 2))
     .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", driver_heap()[0])
+    .config("spark.driver.memory", driver_heap())
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     .config("spark.eventLog.enabled", "true")
     .config("spark.eventLog.dir", f"file:{evdir}")

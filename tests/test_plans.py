@@ -184,7 +184,10 @@ def test_closure_kernel_single_exchange(spark):
 
 def test_tier_kernel_single_exchange(spark, tiny_cols):
     """The fast-path tier kernel must add exactly ONE exchange beyond the
-    input (its repartition) — the sentinel branch reuses the rollup."""
+    input (its repartition). The rollup here is not persisted, so the
+    sentinel branch does not reuse it: Catalyst computes its per-source
+    min/max(epoch_s) straight from the input, a second scan with its own
+    hash exchange (see sentinel_union_prep)."""
     from covsar_spark.operators.rollup import rollup_tokens, with_event_time
     from covsar_spark.operators.tier_kernel import tier_kernel
     from .conftest import cols_to_spark

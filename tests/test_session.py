@@ -1,10 +1,12 @@
 """Session helpers: the default driver heap is derived from the host, never
-exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; building the
-session runs no job; a failed best-effort bench warmup never blocks the run
-but says so on stderr; the generated-code cache holds more classes than
-Spark's default 100; the Python daemon's zipimporters re-read an archive
-only when it changed, and its workers reuse the inherited archive directory
-and frozen heap across tasks (the codegen and worker tests use the JVM)."""
+exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; either way the
+driver gets a fixed heap that is not pre-touched; building the session runs
+no job; a failed best-effort bench warmup never blocks the run but says so
+on stderr; the generated-code cache holds more classes than Spark's default
+100 and keeps a pipeline's class when the pipeline comes back under another
+codegen stage id; the Python daemon's zipimporters re-read an archive only
+when it changed, and its workers reuse the inherited archive directory and
+frozen heap across tasks (the codegen and worker tests use the JVM)."""
 
 from __future__ import annotations
 
@@ -31,27 +33,47 @@ def _mb(heap: str) -> int:
 
 
 @settings(max_examples=200, deadline=None)
-@given(
-    st.integers(min_value=64 << 10, max_value=4 << 30),  # MemTotal kB: 64 MB - 4 TB
-    st.floats(min_value=0.0, max_value=1.0),
-)
-def test_derived_heap_never_exceeds_memtotal(total_kb, avail_frac):
-    meminfo = {"MemTotal": total_kb, "MemAvailable": int(total_kb * avail_frac)}
-    heap, pretouch = driver_heap(env={}, meminfo=meminfo)
+@given(st.integers(min_value=64 << 10, max_value=4 << 30))  # MemTotal kB: 64 MB - 4 TB
+def test_derived_heap_never_exceeds_memtotal(total_kb):
+    heap = driver_heap(env={}, meminfo={"MemTotal": total_kb})
     assert 0 < _mb(heap) * 1024 <= total_kb
     assert _mb(heap) <= 16 << 10
-    # pre-touch commits the whole heap: only when it fits twice into what
-    # the host has available
-    assert pretouch == (2 * _mb(heap) * 1024 <= meminfo["MemAvailable"])
 
 
 def test_this_host_heap_fits():
-    heap, _ = driver_heap(env={})
-    assert _mb(heap) * 1024 <= _meminfo_kb()["MemTotal"]
+    assert _mb(driver_heap(env={})) * 1024 <= _meminfo_kb()["MemTotal"]
 
 
 def test_env_override_is_verbatim():
-    assert driver_heap(env={"SPARK_DRIVER_MEM": "6g"}, meminfo={"MemTotal": 1 << 20}) == ("6g", True)
+    assert driver_heap(env={"SPARK_DRIVER_MEM": "6g"}, meminfo={"MemTotal": 1 << 20}) == "6g"
+
+
+def _built_conf(monkeypatch) -> dict[str, str]:
+    """The conf get_spark hands the builder, with the builder mocked out."""
+    monkeypatch.setattr(os, "environ", os.environ.copy())  # get_spark sets BLAS pins
+    monkeypatch.setattr(session, "SparkSession", mock.MagicMock())
+    builder = session.SparkSession.builder
+    builder.master.return_value = builder.appName.return_value = builder.config.return_value = builder
+    get_spark(cores=2)
+    return {c.args[0]: c.args[1] for c in builder.config.call_args_list}
+
+
+@pytest.mark.parametrize("env_heap", ["3g", None])
+def test_driver_heap_is_fixed_and_not_pretouched(monkeypatch, env_heap):
+    """On the $SPARK_DRIVER_MEM path and on the derived one, the driver JVM
+    gets a fixed heap (-Xms) that it commits on demand."""
+    if env_heap is None:
+        monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+        monkeypatch.setattr(session, "_meminfo_kb", lambda: {"MemTotal": 10 << 20})
+        heap = "4096m"  # 40% of 10 GB
+    else:
+        monkeypatch.setenv("SPARK_DRIVER_MEM", env_heap)
+        heap = env_heap
+    conf = _built_conf(monkeypatch)
+    opts = conf["spark.driver.extraJavaOptions"].split()
+    assert conf["spark.driver.memory"] == heap
+    assert f"-Xms{heap}" in opts
+    assert not any("AlwaysPreTouch" in o for o in opts)
 
 
 def test_get_spark_runs_no_job(monkeypatch):
@@ -102,6 +124,20 @@ def test_codegen_cache_outlives_more_than_100_classes(spark):
         rounds.append(_codegen_compiles(spark) - before)
     assert rounds[0] > 100
     assert rounds[1] == 0
+
+
+def test_pipeline_keeps_its_class_under_a_new_codegen_stage_id(spark):
+    """The same pipeline planned under a different whole-stage codegen id
+    (here: as the second child of a union instead of the only stage, as AQE
+    renumbers a plan's stages from run to run) reuses its generated class."""
+    alone = spark.range(8).selectExpr("id * 3 + 7919 AS x")
+    other = spark.range(5).selectExpr("id * 5 + 104729 AS x")
+    alone.collect()  # compiled as codegen stage 1
+    other.collect()
+    before = _codegen_compiles(spark)
+    rows = other.unionAll(alone).collect()  # `alone` is now stage 2
+    assert _codegen_compiles(spark) - before == 0
+    assert len(rows) == 13
 
 
 def _write_zip(path, modules):
