@@ -16,7 +16,7 @@ carries only scalars + the two flagship walls and stays a few hundred bytes.
 
 Noise adjudication, two mechanisms:
 - BRACKET probes (round-5 lesson): a single-thread host-speed burn (same as
-  scripts/scaling.py — quiet box reads 500-800 ops/s, documented collapses
+  b011304:scripts/scaling.py — quiet box reads 500-800 ops/s, documented collapses
   0.3-28) gates the start (waits up to $SPARK_GRAFT_PROBE_MAX_WAIT_S,
   default 600s, for >= $SPARK_GRAFT_PROBE_MIN, default 400 ops/s) and
   re-reads after the suite; calib_pre/calib_post land in the headline.
@@ -38,7 +38,8 @@ Noise adjudication, two mechanisms:
 
 The headline metric is the flagship tokens pipeline's rolled-up points/sec
 across all retention tiers (BASELINE.json:metric); per-query seconds cover
-the operator families. Run scripts/scaling.py for the N-vs-4N evidence.
+the operator families. The N-vs-4N evidence came from the retired
+b011304:scripts/scaling.py (BENCH_SCALING.json).
 """
 
 from __future__ import annotations
@@ -99,7 +100,7 @@ def _queries_out_path() -> str:
         return canonical
     return os.path.join(_REPO, f"BENCH_QUERIES_{ROUND_TAG}.{os.getpid()}.json")
 
-# single-thread host-speed burn, identical to scripts/scaling.py's CALIBRATE:
+# single-thread host-speed burn, identical to b011304:scripts/scaling.py's CALIBRATE:
 # co-tenant interference shows up as a LOWER ops/s number
 _PROBE_SRC = r"""
 import json, time
@@ -121,7 +122,7 @@ def host_probe(best_of: int = 1, gap_s: float = 0.0) -> float:
     # scrub the BLAS thread pins session.get_spark writes into our own env
     # (inherited by children): a post-session probe would otherwise run
     # single-threaded BLAS and read ~6x lower than the pre-session probe
-    # and scripts/scaling.py's documented 548-824 ops/s quiet range
+    # and b011304:scripts/scaling.py's documented 548-824 ops/s quiet range
     env = {
         k: v
         for k, v in os.environ.items()
@@ -240,7 +241,8 @@ TOKENS_ROWS = int(os.environ.get("SPARK_GRAFT_TOKENS_ROWS", "2000000"))
 HORIZON_DAYS = int(os.environ.get("SPARK_GRAFT_HORIZON_DAYS", "56"))
 N_SOURCES = int(os.environ.get("SPARK_GRAFT_SOURCES", "64"))
 # best-of-N for the headline: identical flagship runs measured 177k-288k pps
-# on this shared box (co-tenant noise) — same protocol as scripts/scaling.py
+# on this shared box (co-tenant noise) — same protocol as
+# b011304:scripts/scaling.py
 FLAGSHIP_REPEATS = int(os.environ.get("SPARK_GRAFT_FLAGSHIP_REPEATS", "2"))
 
 BENCH_QUERIES = [

@@ -151,31 +151,21 @@ def refresh_tier_table(
     """
     from ..sources.tables import utc_day
 
-    dirty = dirty_windows(late, tier_s, time_col=time_col, keys=keys).cache()
-    dirty_days = sorted(
-        r[0].isoformat() for r in dirty.select(utc_day("epoch_s").alias("d")).distinct().collect()
+    days, n_dirty = (
+        dirty_windows(late, tier_s, time_col=time_col, keys=keys)
+        .agg(F.sort_array(F.collect_set(utc_day("epoch_s"))), F.count(F.lit(1)))
+        .first()
     )
-    n_dirty = dirty.count()
+    dirty_days = [d.isoformat() for d in days]
     if not dirty_days:
-        dirty.unpersist()
         return {"n_dirty_windows": 0, "dirty_days": [], "rows_written": 0}
 
-    # day-pruned read of ONLY the dirty partitions
+    # day-pruned read of ONLY the dirty partitions, repaired by the same
+    # merge as the in-memory form
     existing = spark.read.parquet(path).filter(F.col("day").isin(dirty_days))
-    join_keys = [*keys, "epoch_s"]
-    kept = existing.drop("day").join(F.broadcast(dirty), join_keys, "left_anti")
-
-    lo, hi = late.agg(
-        F.min(_win(F.col(time_col), tier_s)), F.max(_win(F.col(time_col), tier_s))
-    ).first()
-    raw = raw_all.filter((F.col(time_col) >= lo) & (F.col(time_col) < hi + tier_s))
-    touched = raw.withColumn("_w", _win(F.col(time_col), tier_s))
-    sel = touched.join(
-        F.broadcast(dirty.withColumnRenamed("epoch_s", "_w")), [*keys, "_w"], "left_semi"
-    ).drop("_w")
-    recomputed = rollup_fn(sel)
-
-    merged = kept.unionByName(recomputed).withColumn("day", utc_day())
+    merged = refresh_tier(
+        existing.drop("day"), raw_all, late, tier_s, rollup_fn, time_col, keys
+    ).withColumn("day", utc_day())
     (
         merged.repartition("day", *keys)
         .sortWithinPartitions(*keys, "epoch_s")
@@ -185,7 +175,6 @@ def refresh_tier_table(
         .parquet(path)
     )
     rows = spark.read.parquet(path).filter(F.col("day").isin(dirty_days)).count()
-    dirty.unpersist()
     # re-arm the downsample-retention policy for repaired days: the rewrite
     # above restores FULL rollup density to each dirty day, so a stale
     # `_downsample/<day>.json` audit marker would make downsample_tier skip

@@ -346,7 +346,7 @@ def resolve_n_probe(
     without bound and recall must eventually sink below any target.
 
     Derivation, anchored in measurement rather than a uniformity argument:
-    the r6 recall study (scripts/ivf_recall_study.py, BENCH_SCALE_STUDY.json
+    the r6 recall study (b011304:scripts/ivf_recall_study.py, BENCH_SCALE_STUDY.json
     `ivf_recall_10x`) measured the planted sim-0.90 top-1 miss rate at the
     10x corpus (161 lists) as 0.194/0.074/0.012/0.0 at n_probe 4/8/16/32 —
     a clean exponential tail, least-squares fit

@@ -383,7 +383,7 @@ def unwrap_2d_tiled(
         the scan and only strip rows ever shuffle (a full-table self-join
         with the strip condition inside the join predicate instead reads
         superlinear past ~100 tiles/raster; measured by
-        scripts/unwrap_scale.py)."""
+        b011304:scripts/unwrap_scale.py)."""
         # pmod, not %: Java % returns negative remainders for the negative
         # coordinates an arbitrary-origin raster produces, so the edge
         # strips would silently come up empty below y/x = 0

@@ -26,13 +26,11 @@ def run_tiers(
     tokens: DataFrame,
     with_eigen: bool = True,
     with_chunks: bool = True,
-    with_filled: bool = True,
     with_closure: bool = False,
     persist: bool = True,
-    persist_fused: bool = True,
     horizon_s: int | None = None,
 ) -> dict[str, dict[str, DataFrame]]:
-    """Returns per tier: {"rollup", "fused", "eigen", "chunks", "filled"?,
+    """Returns per tier: {"rollup", "fused", "filled", "eigen", "chunks",
     "closure"?}, where "fused" is the tier kernel's span rows.
 
     The tier kernel (zero gap-fill + eigen + codec in one shuffle,
@@ -52,17 +50,11 @@ def run_tiers(
         roll = rollup_tokens(ts, tier) if finer is None else cascade(finer, tier)
         if persist:
             roll = roll.persist(StorageLevel.MEMORY_AND_DISK)
-        k = tier_kernel(roll, tier, emit_points=with_filled, closure=with_closure)
-        if persist and persist_fused:
-            # only when several outputs are materialized separately —
-            # a single consumer (e.g. chunk write) should stream through
+        k = tier_kernel(roll, tier, closure=with_closure)
+        if persist:
             k = k.persist(StorageLevel.MEMORY_AND_DISK)
         d: dict[str, DataFrame] = {"rollup": roll, "fused": k}
-        if with_filled:
-            d["filled"], d["eigen"], d["chunks"] = split_outputs(k)
-        else:
-            d["eigen"] = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
-            d["chunks"] = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
+        d["filled"], d["eigen"], d["chunks"] = split_outputs(k)
         if with_closure:
             # the defining CovSAR step (per-(source, eigen-span) closure
             # evaluation + fit + least-norm correction + drift/chi2

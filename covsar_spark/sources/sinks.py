@@ -22,11 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-
-def _day(col: str = "epoch_s") -> F.Column:
-    # integer-UTC day key (see sources/tables.utc_day): timezone-free, so
-    # the dynamic-partition overwrite stays idempotent across sessions
-    return F.date_from_unix_date(F.floor(F.col(col) / 86400).cast("int"))
+from .tables import utc_day
 
 
 def _write_partitioned(df: DataFrame, path: str, part_col: str = "day") -> None:
@@ -60,7 +56,7 @@ def timeseries_frame(roll: DataFrame, eigen: DataFrame, span: int) -> DataFrame:
 def write_timeseries(roll: DataFrame, eigen: DataFrame, path: str, span: int) -> None:
     """S9 sink: consecutive-pair + quality rows, day-partitioned parquet
     (Iceberg-layout; see sources/tables.py for the jar-gated Iceberg path)."""
-    _write_partitioned(timeseries_frame(roll, eigen, span).withColumn("day", _day()), path)
+    _write_partitioned(timeseries_frame(roll, eigen, span).withColumn("day", utc_day()), path)
 
 
 def write_closures(span_stats: DataFrame, triplets: DataFrame, path: str) -> None:
@@ -68,7 +64,7 @@ def write_closures(span_stats: DataFrame, triplets: DataFrame, path: str) -> Non
     span) and `triplets/` (per-triplet closure values), both day-partitioned."""
     pval = span_stats.select(
         "source", "span_s", "n_epochs", "chi2_s", "pval"
-    ).withColumn("day", _day("span_s"))
+    ).withColumn("day", utc_day("span_s"))
     _write_partitioned(pval, f"{path}/pval")
-    tr = triplets.withColumn("day", _day("span_s"))
+    tr = triplets.withColumn("day", utc_day("span_s"))
     _write_partitioned(tr, f"{path}/triplets")

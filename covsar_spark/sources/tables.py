@@ -115,13 +115,10 @@ def apply_retention(
     With `table` set and Iceberg jars present, also issues the catalog-side
     `DELETE WHERE day < cutoff` so snapshot readers see the same horizon.
     """
-    import json as _json
     from datetime import date, timedelta
 
     cutoff_day = int(older_than_epoch) // 86400
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    jvm, hpath, fs = _hfs(spark, path)
     dropped, kept, bytes_dropped = [], [], 0
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
@@ -155,9 +152,7 @@ def apply_retention(
         man_dir = jvm.org.apache.hadoop.fs.Path(path, "_retention")
         fs.mkdirs(man_dir)
         man = jvm.org.apache.hadoop.fs.Path(man_dir, f"{metrics['cutoff_day']}.json")
-        out = fs.create(man, True)
-        out.write(bytearray(_json.dumps({**metrics, "dropped": sorted(dropped)}).encode()))
-        out.close()
+        _write_small_json(fs, man, {**metrics, "dropped": sorted(dropped)})
     return {**metrics, "dropped": sorted(dropped)}
 
 

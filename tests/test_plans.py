@@ -340,7 +340,7 @@ def test_lsh_topk_multitable_plan_shape(spark):
 
 def test_unwrap2d_tiled_plan_shape(spark):
     """The tiled unwrap's scale contract, as caught-and-fixed by
-    scripts/unwrap_scale.py (slope 1.93 -> sub-linear): seam joins must be
+    b011304:scripts/unwrap_scale.py (slope 1.93 -> sub-linear): seam joins must be
     strip-pre-filtered equi-joins (never a full-pixel-table join with the
     strip condition inside the predicate), the tile-adjacency constants and
     per-raster means must broadcast, and the persisted tile kernel must be
@@ -582,7 +582,7 @@ def test_run_tiers_relational_policy_eigen_and_chunks(spark, tiny_cols):
     """A non-zero fill policy composes the operators directly: the eigen and
     chunk tables both come from the same gap-filled tier, one row per span
     each. `run_tiers` runs the zero-fill tier kernel only, and refuses what
-    the kernel cannot give."""
+    the kernel cannot give and the options it no longer takes."""
     import pytest
 
     from covsar_spark.operators.compress import compress_rollup
@@ -604,3 +604,7 @@ def test_run_tiers_relational_policy_eigen_and_chunks(spark, tiny_cols):
         run_tiers(tokens, with_eigen=False, persist=False)
     with pytest.raises(TypeError):
         run_tiers(tokens, policy="ffill", persist=False)
+    with pytest.raises(TypeError):
+        run_tiers(tokens, with_filled=False, persist=False)
+    with pytest.raises(TypeError):
+        run_tiers(tokens, persist_fused=False, persist=False)

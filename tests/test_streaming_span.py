@@ -370,8 +370,7 @@ def test_composed_stream_pipeline_matches_batch(spark, tmp_path):
     # ---- batch path: the flagship composition over the same tokens ----
     tokens = spark.read.parquet(tok_path).filter(F.col("source") != "zz_flush")
     tiers = run_tiers(
-        tokens, with_eigen=True, with_chunks=True,
-        with_filled=False, persist=False,
+        tokens, with_eigen=True, with_chunks=True, persist=False,
     )["1m"]
 
     # stage-1 parity: every streamed finalized window == the batch rollup

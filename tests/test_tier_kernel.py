@@ -87,27 +87,23 @@ def test_run_tiers_closure_equals_operator(spark):
     b = [5, 50, 55] + list(range(300, 321))
     tokens, horizon = _tokens_at(spark, {"a": a, "b": b})
     keys = ["source", "span_s"]
-    for with_filled in (True, False):
-        tiers = run_tiers(
-            tokens, with_chunks=True, with_filled=with_filled, with_closure=True,
-            horizon_s=horizon,
-        )
-        for tier, d in tiers.items():
-            got = _sorted(d["closure"], keys)
-            exp = _sorted(span_stats(closure_correct(d["rollup"], tier, emit_pairs=False)), keys)
-            assert list(got.columns) == list(exp.columns)
-            assert got[keys].equals(exp[keys]), (tier, got[keys], exp[keys])
-            assert np.array_equal(got["n_epochs"].to_numpy(), exp["n_epochs"].to_numpy())
-            for c in exp.columns[3:]:
-                g, e = got[c].to_numpy(np.float64), exp[c].to_numpy(np.float64)
-                assert np.array_equal(np.signbit(g), np.signbit(e)), (tier, c)
-                np.testing.assert_allclose(g, e, rtol=1e-9, atol=1e-9, err_msg=f"{tier} {c}")
-            if tier == "1m":
-                n = dict(zip(zip(got["source"], got["span_s"] - got["span_s"].min()), got["n_epochs"]))
-                assert n == {
-                    ("a", 0): 20, ("a", 7200): 1, ("a", 10800): 2, ("a", 14400): 3,
-                    ("b", 0): 3, ("b", 18000): 20,
-                }
-        for d in tiers.values():
-            d["rollup"].unpersist()
-            d["fused"].unpersist()
+    tiers = run_tiers(tokens, with_chunks=True, with_closure=True, horizon_s=horizon)
+    for tier, d in tiers.items():
+        got = _sorted(d["closure"], keys)
+        exp = _sorted(span_stats(closure_correct(d["rollup"], tier, emit_pairs=False)), keys)
+        assert list(got.columns) == list(exp.columns)
+        assert got[keys].equals(exp[keys]), (tier, got[keys], exp[keys])
+        assert np.array_equal(got["n_epochs"].to_numpy(), exp["n_epochs"].to_numpy())
+        for c in exp.columns[3:]:
+            g, e = got[c].to_numpy(np.float64), exp[c].to_numpy(np.float64)
+            assert np.array_equal(np.signbit(g), np.signbit(e)), (tier, c)
+            np.testing.assert_allclose(g, e, rtol=1e-9, atol=1e-9, err_msg=f"{tier} {c}")
+        if tier == "1m":
+            n = dict(zip(zip(got["source"], got["span_s"] - got["span_s"].min()), got["n_epochs"]))
+            assert n == {
+                ("a", 0): 20, ("a", 7200): 1, ("a", 10800): 2, ("a", 14400): 3,
+                ("b", 0): 3, ("b", 18000): 20,
+            }
+    for d in tiers.values():
+        d["rollup"].unpersist()
+        d["fused"].unpersist()

@@ -288,7 +288,7 @@ def test_masked_benign_holes_iteration_bound():
     separated by >=1 observed pixel, the decorrelated-pixel regime): the
     FFT-Poisson-preconditioned CG must converge to 1e-10 in tens of
     iterations, independent of hole fraction. The mask-study sweep
-    (scripts/unwrap_mask_study.py, BENCH_SCALE_STUDY.json
+    (b011304:scripts/unwrap_mask_study.py, BENCH_SCALE_STUDY.json
     `masked_unwrap_convergence`) measured 20-25 iterations at 10-38% holes
     on 192x192; this pins a 3x-margin bound at 75 so a preconditioner
     regression fails loudly here rather than as a production ValueError."""
