@@ -26,10 +26,6 @@ def c_conj_mul(ar, ai, br, bi) -> tuple[F.Column, F.Column]:
     return ar * br + ai * bi, ai * br - ar * bi
 
 
-def c_abs(re, im) -> F.Column:
-    return F.hypot(re, im)
-
-
 def c_angle(re, im) -> F.Column:
     """np.angle analogue (covsar/closures.py:152)."""
     return F.atan2(im, re)

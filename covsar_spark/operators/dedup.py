@@ -331,22 +331,16 @@ def span_dedup_stats(tokens_df: DataFrame, w: int = SPAN_W) -> DataFrame:
     )
 
 
-def _rolling_hash_expr(w: int, base: int) -> str:
-    return (
-        f"aggregate(slice(tokens, i + 1, {w}), CAST(0 AS BIGINT), "
-        f"(acc, t) -> pmod(acc * {base} + t, {SPAN_P}))"
-    )
-
-
 def _packed_hash_expr(w: int) -> str:
-    """Both 31-bit polynomial hashes in ONE fold over ONE slice: the packed
-    accumulator acc = h1 * 2^31 + h2 IS the final 62-bit key (SPAN_P + 1 ==
-    2^31), so `{h1_fold} * (P+1) + {h2_fold}` and this expression are
-    value-identical (pinned by tests/test_span_dedup.py). Halves the
-    per-position interpreted-lambda work vs two aggregate() calls, each
-    re-slicing the window (higher-order lambdas are interpreted, guide §4.1;
-    measured ~1.7x on the gram-hash stage at sf0.1). Overflow headroom:
-    (acc >> 31) * B1 + t < 2^31 * 2^20 = 2^51; h1 * 2^31 < 2^62."""
+    """Both 31-bit polynomial hashes in ONE fold over ONE slice: h1 and h2
+    hash the window with bases SPAN_B1 and SPAN_B2 mod SPAN_P, and the
+    packed accumulator acc = h1 * 2^31 + h2 IS the final 62-bit key
+    (SPAN_P + 1 == 2^31). Halves the per-position interpreted-lambda work vs
+    one aggregate() call per hash, each re-slicing the window (higher-order
+    lambdas are interpreted, guide §4.1; measured ~1.7x on the gram-hash
+    stage at sf0.1). Overflow headroom: (acc >> 31) * B1 + t < 2^31 * 2^20
+    = 2^51; h1 * 2^31 < 2^62. The hashed path's output equals the
+    content-exact form (tests/test_span_dedup.py)."""
     return (
         f"aggregate(slice(tokens, i + 1, {w}), CAST(0 AS BIGINT), "
         f"(acc, t) -> pmod(shiftright(acc, 31) * {SPAN_B1} + t, {SPAN_P}) * {SPAN_P + 1} + "

@@ -7,10 +7,15 @@ into ONE exchange: it is a ``batch_fn`` over the span-kernel skeleton
 (operators/spanfill.py — sentinels ∪ rows -> repartition(source, span) ->
 sorted mapInPandas carry loop -> dense reindex) carrying the five rollup
 columns, then runs the batched eigh + segmented Gorilla/DoD encode, emitting
-span rows that carry the filled points as array columns — the dense tier
-table is recovered JVM-side with one `explode`, no further shuffle.
+one row per span: its scalars (eigen, point count, token and doc sums),
+both codec blobs, and the epochs of its grid that no rollup row observed.
 Sentinels guarantee even fully-empty spans (a gap wider than a whole span)
 are emitted.
+
+The span rows ship nothing the JVM already holds. The dense tier table is
+the input rollup (the observed points, verbatim) plus one constant row per
+gap epoch: `split_outputs` builds it with one union and one `explode`, no
+further shuffle.
 
 ONLY valid for the `zero` fill policy: ffill/linear need cross-span
 continuity per source, which a span-partitioned kernel cannot see — those
@@ -45,9 +50,6 @@ from .codecs import encode_dod_many, encode_xor_many
 from .eigen import lagcov_eig_batch
 from .spanfill import dense_span_kernel
 
-# filled points ride as parallel array columns (one numpy array per span row)
-# — zero per-point Python; the dense tier table is arrays_zip+explode'd back
-# JVM-side. max/min ride as double (NaN = gap) and cast to int after explode.
 TIER_SCHEMA = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
@@ -59,16 +61,12 @@ TIER_SCHEMA = T.StructType(
         T.StructField("n_points", T.IntegerType(), False),
         T.StructField("ts_blob", T.BinaryType(), False),
         T.StructField("val_blob", T.BinaryType(), False),
-        T.StructField("p_epoch", T.ArrayType(T.LongType(), False), False),
-        T.StructField("p_tok", T.ArrayType(T.LongType(), False), False),
-        T.StructField("p_docs", T.ArrayType(T.LongType(), False), False),
-        T.StructField("p_max", T.ArrayType(T.DoubleType(), True), False),
-        T.StructField("p_min", T.ArrayType(T.DoubleType(), True), False),
-        T.StructField("p_rate", T.ArrayType(T.DoubleType(), False), False),
-        T.StructField("p_filled", T.ArrayType(T.BooleanType(), False), False),
+        T.StructField("s_tok", T.LongType(), False),
+        T.StructField("s_docs", T.LongType(), False),
+        # grid epochs no rollup row observed: the span's zero-filled points
+        T.StructField("gap_epochs", T.ArrayType(T.LongType(), False), False),
     ]
 )
-TIER_SCHEMA_META = T.StructType([f for f in TIER_SCHEMA.fields if not f.name.startswith("p_")])
 # closure stats ride as c_-prefixed columns (span_stats' columns past the key)
 CLOSURE_FIELDS = [T.StructField(f"c_{f.name}", f.dataType, False) for f in _STATS_SCHEMA.fields[2:]]
 
@@ -84,15 +82,13 @@ TIER_PAYLOAD = [
 ]
 
 
-def tier_rows(
-    keys, grids, values, observed, p: int, emit_points: bool, closure: bool = False
-) -> pd.DataFrame:
-    """Span-kernel batch -> TIER_SCHEMA rows (TIER_SCHEMA_META without
-    ``emit_points``): one batched eigh over the zero-filled token counts and
-    one segmented encode each for the grid timestamps and the rate series;
-    ``closure`` appends the CLOSURE_FIELDS from one batched closure
-    correction over the observed token counts."""
-    tok, docs, mx, mn, rate = values
+def tier_rows(keys, grids, values, observed, p: int, closure: bool = False) -> pd.DataFrame:
+    """Span-kernel batch -> TIER_SCHEMA rows: one batched eigh over the
+    zero-filled token counts, one segmented encode each for the grid
+    timestamps and the rate series, the token and doc sums, and each
+    span's unobserved grid epochs; ``closure`` appends the CLOSURE_FIELDS
+    from one batched closure correction over the observed token counts."""
+    tok, docs, _, _, rate = values
     n = np.array([len(g) for g in grids], dtype=np.int32)
     res = lagcov_eig_batch([t.astype(np.float64) for t in tok], p)
     out = {
@@ -105,12 +101,10 @@ def tier_rows(
         "n_points": n,
         "ts_blob": encode_dod_many(grids),
         "val_blob": encode_xor_many(rate),
+        "s_tok": np.array([t.sum() for t in tok], dtype=np.int64),
+        "s_docs": np.array([d.sum() for d in docs], dtype=np.int64),
+        "gap_epochs": [g[~o] for g, o in zip(grids, observed)],
     }
-    if emit_points:
-        out.update(
-            p_epoch=grids, p_tok=tok, p_docs=docs, p_max=mx, p_min=mn, p_rate=rate,
-            p_filled=[~o for o in observed],
-        )
     if closure:
         stats = correct_span_batch(
             [t[o][:MAX_EPOCHS].astype(np.float64) for t, o in zip(tok, observed)]
@@ -120,42 +114,41 @@ def tier_rows(
     return pd.DataFrame(out)
 
 
-def tier_kernel(
-    rollup: DataFrame, tier: str, p: int = EIGEN_P, emit_points: bool = True, closure: bool = False
-) -> DataFrame:
-    """rollup -> span rows with (eigen, blobs[, dense filled points arrays]
-    [, closure stats]).
-
-    ``emit_points=False`` drops the point-array columns from the Arrow
-    return path when no consumer materializes the dense tier (the retention
-    store is the compressed chunks; dense rows decode on demand)."""
+def tier_kernel(rollup: DataFrame, tier: str, p: int = EIGEN_P, closure: bool = False) -> DataFrame:
+    """rollup -> TIER_SCHEMA span rows (eigen, blobs, sums, gap epochs
+    [, closure stats])."""
 
     def batch_fn(keys, grids, values, observed):
-        return tier_rows(keys, grids, values, observed, p, emit_points, closure)
+        return tier_rows(keys, grids, values, observed, p, closure)
 
-    schema = TIER_SCHEMA if emit_points else TIER_SCHEMA_META
-    if closure:
-        schema = T.StructType(schema.fields + CLOSURE_FIELDS)
+    schema = T.StructType(TIER_SCHEMA.fields + CLOSURE_FIELDS) if closure else TIER_SCHEMA
     return dense_span_kernel(rollup, tier, TIER_PAYLOAD, batch_fn, schema)
 
 
-def split_outputs(k: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """kernel output -> (filled tier table, eigen table, chunk table)."""
-    zipped = F.arrays_zip("p_epoch", "p_tok", "p_docs", "p_max", "p_min", "p_rate", "p_filled")
-    int_or_null = lambda c: F.when(~F.isnan(c), c.cast("int"))  # noqa: E731 — NaN marks a gap
-    filled = k.select("source", F.explode(zipped).alias("pt")).select(
-        "source",
-        F.col("pt.p_epoch").alias("epoch_s"),
-        F.col("pt.p_tok").alias("token_count"),
-        F.col("pt.p_docs").alias("n_docs"),
-        int_or_null(F.col("pt.p_max")).alias("max_tok"),
-        int_or_null(F.col("pt.p_min")).alias("min_tok"),
-        F.col("pt.p_rate").alias("rate"),
-        F.col("pt.p_filled").alias("filled"),
-    )
+def split_outputs(k: DataFrame, roll: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(kernel output, its input rollup) -> (filled tier table, eigen table,
+    chunk table). The filled table is ``roll``'s rows (the observed points,
+    ``filled = false``) plus one zero-filled row per gap epoch."""
+    gaps = gap_rows(k.select("source", F.explode("gap_epochs").alias("epoch_s")))
+    filled = roll.select(*gaps.columns).unionByName(gaps)
     eig = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
     chunks = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
     return filled, eig, chunks
+
+
+def gap_rows(points: DataFrame) -> DataFrame:
+    """(source, epoch_s) rows -> ROLLUP_SCHEMA rows of zero-filled gap
+    points: no tokens or docs, null max/min, rate 0, ``filled = true``."""
+    return points.select(
+        "source",
+        "epoch_s",
+        F.lit(0).cast("long").alias("token_count"),
+        F.lit(0).cast("long").alias("n_docs"),
+        F.lit(None).cast("int").alias("max_tok"),
+        F.lit(None).cast("int").alias("min_tok"),
+        F.lit(0.0).alias("rate"),
+        F.lit(True).alias("filled"),
+    )
 
 
 def closure_stats(k: DataFrame) -> DataFrame:

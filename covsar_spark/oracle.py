@@ -144,16 +144,3 @@ def closure_stats(
         columns=["source", "span_s", "n_epochs", "r", "slope", "intercept",
                  "rmse", "drift_rms", "bias", "chi2_s", "pval"],
     )
-
-
-def full_pipeline(cols: dict, policy: str = "zero") -> dict[str, dict[str, pd.DataFrame]]:
-    """tokens columns -> per-tier {rollup, filled, eigen} golden outputs."""
-    df = tokens_frame(cols)
-    m1 = rollup(df, "1m")
-    h1 = cascade(m1, "1h")
-    d1 = cascade(h1, "1d")
-    out = {}
-    for tier, r in (("1m", m1), ("1h", h1), ("1d", d1)):
-        filled = gapfill(r, tier, policy)
-        out[tier] = {"rollup": r, "filled": filled, "eigen": eigen(filled, tier)}
-    return out

@@ -54,7 +54,7 @@ def run_tiers(
         if persist:
             k = k.persist(StorageLevel.MEMORY_AND_DISK)
         d: dict[str, DataFrame] = {"rollup": roll, "fused": k}
-        d["filled"], d["eigen"], d["chunks"] = split_outputs(k)
+        d["filled"], d["eigen"], d["chunks"] = split_outputs(k, roll)
         if with_closure:
             # the defining CovSAR step (per-(source, eigen-span) closure
             # evaluation + fit + least-norm correction + drift/chi2
@@ -71,15 +71,15 @@ def flagship(tokens: DataFrame) -> DataFrame:
     """The 1m tier's per-window rolled-up points + dominant-mode metrics:
     one select over the tier kernel's span rows (the kernel `run_tiers`
     and the benchmark run). `EIGEN_SPAN["1m"]` is one hour, so each span
-    row is one hourly window, and its point arrays hold that hour's dense
-    filled series; the window sums are taken over those arrays."""
+    row is one hourly window: its token and doc sums are the window's, and
+    its gap epochs are the window's zero-filled points."""
     k = run_tiers(tokens, persist=False)["1m"]["fused"]
     return k.select(
         "source",
         "span_s",
-        F.aggregate("p_tok", F.lit(0).cast("long"), lambda a, x: a + x).alias("token_count"),
-        F.aggregate("p_docs", F.lit(0).cast("long"), lambda a, x: a + x).alias("n_docs"),
-        F.size(F.filter("p_filled", lambda x: x)).cast("long").alias("n_filled"),
+        F.col("s_tok").alias("token_count"),
+        F.col("s_docs").alias("n_docs"),
+        F.size("gap_epochs").cast("long").alias("n_filled"),
         "n_epochs",
         "lam",
         "tc",

@@ -77,9 +77,3 @@ CHUNK_SCHEMA = T.StructType(
 TESTDATA_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def load_testdata(spark, sf_dir: str, *names: str):
-    """Read driver parquet tables; returns dict name -> DataFrame."""
-    names = names or tuple(TESTDATA_TABLES)
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -12,8 +12,9 @@ an event-time timeout set at span end fires once the watermark passes it —
 only then does the span run the EXACT batch kernel through its public
 per-span entry points (`spanfill.fill_span`: dense zero-filled grid ->
 `tier_kernel.tier_rows`: batched lag-cov eigh -> Gorilla XOR + DoD
-encode) and emit its TIER_SCHEMA_META row. No span is ever computed twice
-and none is computed early: emission is append-mode by construction.
+encode, token/doc sums and gap epochs) and emit its TIER_SCHEMA row, the
+batch kernel's one schema. No span is ever computed twice and none is
+computed early: emission is append-mode by construction.
 
 Declared streamed semantics vs the batch `tier_kernel` (both pinned in
 tests/test_streaming_span.py):
@@ -22,8 +23,8 @@ tests/test_streaming_span.py):
   [span_s, span_s + span). The batch kernel clips the first/last span of a
   source to the observed data extent [lo, hi] — an offline quantity a
   stream cannot know mid-flight. Spans whose data extent aligns to span
-  boundaries are BIT-IDENTICAL (lam/tc/eig and both codec blobs) between
-  the two paths.
+  boundaries are BIT-IDENTICAL (lam/tc/eig, both codec blobs, the token
+  and doc sums and the gap epochs) between the two paths.
 - coverage: a streamed span exists only if >= 1 rollup row fell in it; the
   batch sentinel union also emits fully-empty interior spans. A deployment
   needing those unions per-span HEARTBEAT rows upstream (`heartbeat_rows`,
@@ -55,7 +56,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 from ..operators.spanfill import fill_span
-from ..operators.tier_kernel import TIER_PAYLOAD, TIER_SCHEMA_META, tier_rows
+from ..operators.tier_kernel import TIER_PAYLOAD, TIER_SCHEMA, gap_rows, tier_rows
 from ..schemas import EIGEN_P, EIGEN_SPAN, TIERS
 
 # per-span accumulator: parallel arrays over observed epochs (append-only;
@@ -91,9 +92,7 @@ def _finalize(source: str, span_s: int, tier_s: int, span: int, p: int, st) -> p
     sel = order[keep]
     grid = np.arange(span_s, span_s + span, tier_s, dtype=np.int64)
     dense, observed = fill_span(grid, tier_s, epochs[sel], [v[sel] for v in vals], TIER_PAYLOAD)
-    return tier_rows(
-        [(source, span_s)], [grid], [[d] for d in dense], [observed], p, emit_points=False
-    )
+    return tier_rows([(source, span_s)], [grid], [[d] for d in dense], [observed], p)
 
 
 def make_span_updater(tier: str, p: int = EIGEN_P):
@@ -152,7 +151,8 @@ def span_stream(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Finalized-rollup stream -> append-mode stream of span kernel rows
-    (TIER_SCHEMA_META: eigen lam/tc/eig + ts/val codec blobs)."""
+    (TIER_SCHEMA: eigen lam/tc/eig, ts/val codec blobs, token and doc sums
+    and the span's gap epochs)."""
     span = EIGEN_SPAN[tier]
     with_ts = (
         rollup_stream.withColumn("ts", F.timestamp_seconds(F.col("epoch_s")))
@@ -166,7 +166,7 @@ def span_stream(
     )
     return with_ts.groupBy("source", "span_s").applyInPandasWithState(
         make_span_updater(tier, p),
-        TIER_SCHEMA_META,
+        TIER_SCHEMA,
         SPAN_STATE_SCHEMA,
         "append",
         GroupStateTimeout.EventTimeTimeout,
@@ -186,22 +186,15 @@ def heartbeat_rows(
     registry list (no driver loop — one row per span via `sequence`)."""
     span = EIGEN_SPAN[tier]
     reg = spark.createDataFrame([(s,) for s in sources], "source string")
-    return reg.select(
-        "source",
-        F.explode(
-            F.sequence(
-                F.lit((start_s // span) * span).cast("long"),
-                F.lit(end_s - 1).cast("long"),
-                F.lit(span).cast("long"),
-            )
-        ).alias("epoch_s"),
-    ).select(
-        "source",
-        "epoch_s",
-        F.lit(0).cast("long").alias("token_count"),
-        F.lit(0).cast("long").alias("n_docs"),
-        F.lit(None).cast("int").alias("max_tok"),
-        F.lit(None).cast("int").alias("min_tok"),
-        F.lit(0.0).alias("rate"),
-        F.lit(True).alias("filled"),
+    return gap_rows(
+        reg.select(
+            "source",
+            F.explode(
+                F.sequence(
+                    F.lit((start_s // span) * span).cast("long"),
+                    F.lit(end_s - 1).cast("long"),
+                    F.lit(span).cast("long"),
+                )
+            ).alias("epoch_s"),
+        )
     )

@@ -193,7 +193,7 @@ def test_tier_kernel_single_exchange(spark, tiny_cols):
     from .conftest import cols_to_spark
 
     roll = rollup_tokens(with_event_time(cols_to_spark(spark, tiny_cols)), "1m")
-    plan = _plan(tier_kernel(roll, "1m", emit_points=False))
+    plan = _plan(tier_kernel(roll, "1m"))
     # exactly one wide kernel shuffle; no join in the kernel's data path
     # (the sentinel branch is a union, not a join)
     assert plan.count("REPARTITION_BY_NUM") == 1
@@ -229,8 +229,8 @@ def _flagship_tokens(spark):
 def test_flagship_reuses_filled_tier(spark):
     """flagship() is one select over the 1m tier kernel's span rows: its
     final AQE plan holds the kernel's one repartition and one MapInPandas,
-    and no join and no cached relation (the hourly sums are taken over the
-    span rows' point arrays, not by exploding and re-grouping them)."""
+    and no join and no cached relation (the hourly sums and gap counts are
+    span-row scalars, not an explode and re-group of the dense points)."""
     from covsar_spark.plans.pipeline import flagship
 
     df = flagship(_flagship_tokens(spark))
@@ -582,18 +582,21 @@ def test_run_tiers_relational_policy_eigen_and_chunks(spark, tiny_cols):
     """A non-zero fill policy composes the operators directly: the eigen and
     chunk tables both come from the same gap-filled tier, one row per span
     each. `run_tiers` runs the zero-fill tier kernel only, and refuses what
-    the kernel cannot give and the options it no longer takes."""
+    the kernel cannot give; it and `tier_kernel` refuse the options they no
+    longer take."""
     import pytest
 
     from covsar_spark.operators.compress import compress_rollup
     from covsar_spark.operators.eigen import eigen_rollup
     from covsar_spark.operators.gapfill import gapfill
     from covsar_spark.operators.rollup import rollup_tokens, with_event_time
+    from covsar_spark.operators.tier_kernel import tier_kernel
     from covsar_spark.plans.pipeline import run_tiers
     from .conftest import cols_to_spark
 
     tokens = cols_to_spark(spark, tiny_cols)
-    filled = gapfill(rollup_tokens(with_event_time(tokens), "1m"), "1m", "ffill")
+    roll = rollup_tokens(with_event_time(tokens), "1m")
+    filled = gapfill(roll, "1m", "ffill")
     eig = eigen_rollup(filled, "1m").select("source", "span_s", "n_epochs")
     ch = compress_rollup(filled, "1m").select("source", "span_s", "n_points")
     eig = eig.orderBy("source", "span_s").collect()
@@ -608,3 +611,5 @@ def test_run_tiers_relational_policy_eigen_and_chunks(spark, tiny_cols):
         run_tiers(tokens, with_filled=False, persist=False)
     with pytest.raises(TypeError):
         run_tiers(tokens, persist_fused=False, persist=False)
+    with pytest.raises(TypeError):
+        tier_kernel(roll, "1m", emit_points=False)

@@ -13,8 +13,8 @@ from .conftest import assert_frames_equal, cols_to_spark
 def test_event_time_matches_oracle(spark, tiny_cols):
     df = cols_to_spark(spark, tiny_cols)
     got = with_event_time(df).select("doc_id", "epoch_s").toPandas().sort_values("doc_id")
-    exp_epoch = oracle.derive_epoch_s(tiny_cols["doc_id"])
-    assert np.array_equal(got["epoch_s"].to_numpy(), exp_epoch)
+    want_epoch = oracle.derive_epoch_s(tiny_cols["doc_id"])
+    assert np.array_equal(got["epoch_s"].to_numpy(), want_epoch)
 
 
 def test_rollup_all_tiers_exact(spark, tiny_cols):

@@ -46,7 +46,7 @@ def _write_ordered_chunks(pdf: pd.DataFrame, path: str, n_chunks: int):
     parts = []
     for s, g in pdf.groupby("source"):
         g = g.sort_values(["epoch_s", "ord"]).reset_index(drop=True)
-        parts.append(np.array_split(g, n_chunks))
+        parts.append([g.iloc[idx] for idx in np.array_split(np.arange(len(g)), n_chunks)])
     t0 = time.time() - 3600
     for k in range(n_chunks):
         chunk = pd.concat([p[k] for p in parts], ignore_index=True)

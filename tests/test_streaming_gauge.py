@@ -38,7 +38,8 @@ def _write_chunks(pdf: pd.DataFrame, path: str, n_chunks: int, flush: bool):
     os.makedirs(path, exist_ok=True)
     parts = []
     for _, g in pdf.groupby("source"):
-        parts.append(np.array_split(g.sort_values(["ts_us", "ord"]).reset_index(drop=True), n_chunks))
+        g = g.sort_values(["ts_us", "ord"]).reset_index(drop=True)
+        parts.append([g.iloc[idx] for idx in np.array_split(np.arange(len(g)), n_chunks)])
     t0 = time.time() - 3600
     for k in range(n_chunks):
         chunk = pd.concat([p[k] for p in parts], ignore_index=True)

@@ -1,8 +1,9 @@
 """Streamed span finalization == batch tier kernel (SURVEY §2.9 closed-stack
 semantics): the watermark-gated `span_stream` must reproduce the batch
-`tier_kernel` output BIT-FOR-BIT (eigen lam/tc/eig and both codec blobs) on
-spans whose data extent aligns to span boundaries — the declared parity
-surface (span_stream.py module docstring)."""
+`tier_kernel` output BIT-FOR-BIT (eigen lam/tc/eig, both codec blobs, the
+token and doc sums and the gap epochs) on spans whose data extent aligns to
+span boundaries — the declared parity surface (span_stream.py module
+docstring)."""
 
 from __future__ import annotations
 
@@ -43,6 +44,14 @@ def _rollup_rows(tier_s: int = TIER_S, span: int = SPAN, base: int = BASE):
                      tok / float(tier_s), False)
                 )
     return rows
+
+
+def _assert_sums_and_gaps_equal(got, exp):
+    """Row-aligned streamed and batch span rows carry the same token and
+    doc sums and the same gap epochs."""
+    assert got["s_tok"].tolist() == exp["s_tok"].tolist()
+    assert got["s_docs"].tolist() == exp["s_docs"].tolist()
+    assert [list(g) for g in got["gap_epochs"]] == [list(e) for e in exp["gap_epochs"]]
 
 
 @pytest.mark.parametrize("tier", ["1m", "1h", "1d"])
@@ -87,7 +96,7 @@ def test_span_stream_matches_batch_kernel(spark, tmp_path, tier):
         schema=ROLLUP_SCHEMA,
     )
     exp = (
-        tier_kernel(batch_in, tier, emit_points=False)
+        tier_kernel(batch_in, tier)
         .toPandas()
         .sort_values(["source", "span_s"])
         .reset_index(drop=True)
@@ -103,6 +112,7 @@ def test_span_stream_matches_batch_kernel(spark, tmp_path, tier):
         assert np.array_equal(np.asarray(g), np.asarray(e))
     assert [bytes(b) for b in got["ts_blob"]] == [bytes(b) for b in exp["ts_blob"]]
     assert [bytes(b) for b in got["val_blob"]] == [bytes(b) for b in exp["val_blob"]]
+    _assert_sums_and_gaps_equal(got, exp)
 
 
 def test_heartbeat_emits_empty_interior_spans(spark, tmp_path):
@@ -136,7 +146,7 @@ def test_heartbeat_emits_empty_interior_spans(spark, tmp_path):
 
     batch_in = spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema=ROLLUP_SCHEMA)
     exp = (
-        tier_kernel(batch_in, TIER, emit_points=False)
+        tier_kernel(batch_in, TIER)
         .toPandas()
         .sort_values("span_s")
         .reset_index(drop=True)
@@ -146,6 +156,7 @@ def test_heartbeat_emits_empty_interior_spans(spark, tmp_path):
     assert got["n_epochs"].tolist() == exp["n_epochs"].tolist()
     assert [bytes(b) for b in got["ts_blob"]] == [bytes(b) for b in exp["ts_blob"]]
     assert [bytes(b) for b in got["val_blob"]] == [bytes(b) for b in exp["val_blob"]]
+    _assert_sums_and_gaps_equal(got, exp)
 
 
 def test_span_stream_last_per_epoch_wins(spark, tmp_path):
@@ -180,9 +191,10 @@ def test_span_stream_last_per_epoch_wins(spark, tmp_path):
     batch_in = spark.createDataFrame(
         pd.DataFrame(first[:2] + fixed + first[3:], columns=cols), schema=ROLLUP_SCHEMA
     )
-    exp = tier_kernel(batch_in, TIER, emit_points=False).toPandas()
+    exp = tier_kernel(batch_in, TIER).toPandas()
     assert got["lam"].tolist() == exp["lam"].tolist()
     assert [bytes(b) for b in got["val_blob"]] == [bytes(b) for b in exp["val_blob"]]
+    _assert_sums_and_gaps_equal(got, exp)
 
 
 def _span_rows(source, spans, tok_base=40):
@@ -263,7 +275,7 @@ def test_span_stream_restart_resumes_exactly_once(spark, tmp_path):
     # documented coverage difference (span_stream.py docstring): a streamed
     # span exists only if >= 1 row fell in it. Compare the populated spans.
     exp = (
-        tier_kernel(batch_in, TIER, emit_points=False)
+        tier_kernel(batch_in, TIER)
         .filter(F.col("span_s").isin(want_spans))
         .toPandas()
         .sort_values("span_s")
@@ -273,6 +285,7 @@ def test_span_stream_restart_resumes_exactly_once(spark, tmp_path):
     assert got["n_epochs"].tolist() == exp["n_epochs"].tolist()
     assert [bytes(b) for b in got["ts_blob"]] == [bytes(b) for b in exp["ts_blob"]]
     assert [bytes(b) for b in got["val_blob"]] == [bytes(b) for b in exp["val_blob"]]
+    _assert_sums_and_gaps_equal(got, exp)
 
 
 def test_rollup_stream_output_feeds_span_stream_schema(spark, tmp_path):
@@ -321,10 +334,10 @@ def test_composed_stream_pipeline_matches_batch(spark, tmp_path):
         MISSING grid slot (the batch `gapfill` op's filled=True rows,
         which span_stream treats as markers by contract) --> span_stream
 
-    and asserts the TIER_SCHEMA_META output is bit-identical (lam/tc/eig +
-    both codec blobs) to the batch composition `run_tiers` executes
-    (rollup -> gapfill -> tier_kernel), including a fully-EMPTY interior
-    span covered only by markers. Event times are crc32-derived on both
+    and asserts the TIER_SCHEMA output is bit-identical (lam/tc/eig, both
+    codec blobs, the token and doc sums and the gap epochs) to the batch
+    composition `run_tiers` executes (rollup -> gapfill -> tier_kernel),
+    including a fully-EMPTY interior span covered only by markers. Event times are crc32-derived on both
     paths; doc_ids are searched so each source's extent is span-aligned
     (the batch extent clip is a no-op -> exact parity surface)."""
     from covsar_spark.operators.gapfill import gapfill
@@ -430,3 +443,4 @@ def test_composed_stream_pipeline_matches_batch(spark, tmp_path):
         assert np.array_equal(np.asarray(g), np.asarray(e))
     assert [bytes(b) for b in got["ts_blob"]] == [bytes(b) for b in exp["ts_blob"]]
     assert [bytes(b) for b in got["val_blob"]] == [bytes(b) for b in exp["val_blob"]]
+    _assert_sums_and_gaps_equal(got, exp)

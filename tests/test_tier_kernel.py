@@ -19,9 +19,18 @@ def _sorted(df, keys):
 
 
 def test_tier_kernel_equals_relational(spark, tiny_gappy_cols):
-    roll = rollup_tokens(with_event_time(cols_to_spark(spark, tiny_gappy_cols)), "1m")
+    """Two inputs: the gappy fixture, and a layout with whole hours that no
+    minute observes (sentinel-only spans, whose filled rows all come from
+    the kernel's gap epochs)."""
+    gappy = with_event_time(cols_to_spark(spark, tiny_gappy_cols))
+    tokens, horizon = _tokens_at(spark, {"a": list(range(6)) + [130, 131], "b": [3, 200]})
+    for ts in (gappy, with_event_time(tokens, horizon)):
+        _check_tier_kernel_equals_relational(rollup_tokens(ts, "1m"))
+
+
+def _check_tier_kernel_equals_relational(roll):
     k = tier_kernel(roll, "1m")
-    filled_k, eig_k, chunks_k = split_outputs(k)
+    filled_k, eig_k, chunks_k = split_outputs(k, roll)
 
     filled_r = gapfill(roll, "1m", "zero")
     got = _sorted(filled_k, ["source", "epoch_s"])
@@ -46,6 +55,38 @@ def test_tier_kernel_equals_relational(spark, tiny_gappy_cols):
         assert bytes(a) == bytes(b)
     for a, b in zip(ck["val_blob"], ch_r["val_blob"]):
         assert bytes(a) == bytes(b)
+
+
+def test_tier_rows_schema_on_observed_and_all_gap_spans():
+    """JVM-free: `tier_rows` on one observed and one all-gap span returns
+    exactly TIER_SCHEMA's columns, in a frame Arrow accepts under that
+    schema; the sums cover the observed points and the gap epochs are the
+    grid epochs no row observed."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from covsar_spark.operators.spanfill import fill_span
+    from covsar_spark.operators.tier_kernel import TIER_PAYLOAD, TIER_SCHEMA, tier_rows
+    from covsar_spark.schemas import EIGEN_P
+
+    grids = [np.arange(0, 3600, 60, dtype=np.int64), np.arange(3600, 7200, 60, dtype=np.int64)]
+    obs_epochs = np.array([0, 120, 600], dtype=np.int64)
+    obs_values = [
+        np.array([5, 7, 11]), np.array([1, 2, 3]), np.array([5.0, 4.0, 9.0]),
+        np.array([5.0, 3.0, 2.0]), np.array([5, 7, 11]) / 60.0,
+    ]
+    spans = [
+        fill_span(grids[0], 60, obs_epochs, obs_values, TIER_PAYLOAD),
+        fill_span(grids[1], 60, obs_epochs[:0], [v[:0] for v in obs_values], TIER_PAYLOAD),
+    ]
+    values = [[dense[j] for dense, _ in spans] for j in range(len(TIER_PAYLOAD))]
+    out = tier_rows([("a", 0), ("a", 3600)], grids, values, [o for _, o in spans], EIGEN_P)
+
+    assert list(out.columns) == TIER_SCHEMA.names
+    pa.Table.from_pandas(out, schema=to_arrow_schema(TIER_SCHEMA), preserve_index=False)
+    assert out["s_tok"].tolist() == [23, 0] and out["s_docs"].tolist() == [6, 0]
+    assert list(out["gap_epochs"][0]) == [e for e in grids[0] if e not in obs_epochs]
+    assert list(out["gap_epochs"][1]) == list(grids[1])
 
 
 def _tokens_at(spark, layout: dict[str, list[int]]):
