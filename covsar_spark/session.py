@@ -2,12 +2,14 @@
 
 Local-mode knobs are a stand-in for cluster settings: at 1000 executors on
 100 TB the same config surface applies (AQE, skew join splitting, Arrow batch
-sizing); only ``master`` and the partition counts change.
+sizing, a fixed 1 MiB Tungsten page so that small hash relations and
+aggregates hold small pages); only ``master`` and the partition counts change.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -64,14 +66,16 @@ def driver_java_options(heap: str) -> str:
 def _shuffle_dir() -> str:
     """tmpfs shuffle dir only when /dev/shm actually has room: a default
     64MB container shm passes the bare isdir() check and then fails tasks
-    with ENOSPC mid-run (round-4 review). Requires >= 2 GiB free."""
+    with ENOSPC mid-run (round-4 review). Requires >= 2 GiB free. A probe
+    that fails says so on stderr and falls back to /tmp."""
     try:
         import shutil
 
         if os.path.isdir("/dev/shm") and shutil.disk_usage("/dev/shm").free >= 2 << 30:
             return "/dev/shm/spark-tmp"
-    except OSError:
-        pass
+    except OSError as e:
+        # a /tmp fallback changes shuffle speed: say so
+        print(f"covsar_spark: shuffle dir probe failed: {type(e).__name__}: {e}", file=sys.stderr)
     return "/tmp"
 
 
@@ -167,6 +171,16 @@ def get_spark(
         # run, so the same pipeline came back under a new name and was
         # compiled again (6-24 classes in every timed `suite` pass)
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # Spark sizes its Tungsten page from the heap (8 MiB at a 2g heap,
+        # 32 MiB at 6.4g), and every BytesToBytesMap starts with one whole
+        # page, so a 10-row broadcast hash relation pinned 8-32 MB in the
+        # driver's block store until a full GC let the ContextCleaner drop
+        # it. One perfbench `suite` pass builds about 13 of them; at a 2g
+        # heap (4 vCPUs) its broadcast storage after 4 passes was 316 MB and
+        # old gen 805 MB with the derived page, 53 and 285 MB with 1 MiB
+        # pages (Spark's floor). A map grows a page at a time, up to 8,192
+        # pages per task
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.driver.memory", driver_mem)
         .config("spark.driver.extraJavaOptions", driver_java_options(driver_mem))
         # local mode: shuffle through tmpfs when present (a real cluster sets

@@ -2,17 +2,25 @@
 exceeds it, and `$SPARK_DRIVER_MEM` overrides it verbatim; either way the
 driver gets a fixed heap that is not pre-touched; building the session runs
 no job; a failed best-effort bench warmup never blocks the run but says so
-on stderr; the generated-code cache holds more classes than Spark's default
-100 and keeps a pipeline's class when the pipeline comes back under another
-codegen stage id; the Python daemon's zipimporters re-read an archive only
-when it changed, and its workers reuse the inherited archive directory and
-frozen heap across tasks (the codegen and worker tests use the JVM)."""
+on stderr, as does a failed shuffle-dir probe; the session sets a 1 MiB
+Tungsten page that a caller's ``extra_conf`` still overrides, so a tiny
+broadcast hash join holds a small page in the driver's block store; the
+generated-code cache holds more classes than Spark's default 100 and keeps
+a pipeline's class when the pipeline comes back under another codegen stage
+id; the Python daemon's zipimporters re-read an archive only when it
+changed, and its workers reuse the inherited archive directory and frozen
+heap across tasks. The JVM tests are
+``test_tiny_broadcast_hash_join_pins_one_small_page``,
+``test_codegen_cache_outlives_more_than_100_classes``,
+``test_pipeline_keeps_its_class_under_a_new_codegen_stage_id`` and
+``test_workers_keep_zip_directory_and_frozen_heap_across_tasks``."""
 
 from __future__ import annotations
 
 import gc
 import importlib
 import os
+import shutil
 import sys
 import zipfile
 import zipimport
@@ -48,14 +56,20 @@ def test_env_override_is_verbatim():
     assert driver_heap(env={"SPARK_DRIVER_MEM": "6g"}, meminfo={"MemTotal": 1 << 20}) == "6g"
 
 
-def _built_conf(monkeypatch) -> dict[str, str]:
-    """The conf get_spark hands the builder, with the builder mocked out."""
+def _config_calls(monkeypatch, **kwargs) -> list[tuple[str, str]]:
+    """The (key, value) pairs get_spark hands the builder, in order, with the
+    builder mocked out."""
     monkeypatch.setattr(os, "environ", os.environ.copy())  # get_spark sets BLAS pins
     monkeypatch.setattr(session, "SparkSession", mock.MagicMock())
     builder = session.SparkSession.builder
     builder.master.return_value = builder.appName.return_value = builder.config.return_value = builder
-    get_spark(cores=2)
-    return {c.args[0]: c.args[1] for c in builder.config.call_args_list}
+    get_spark(cores=2, **kwargs)
+    return [c.args for c in builder.config.call_args_list]
+
+
+def _built_conf(monkeypatch) -> dict[str, str]:
+    """The conf get_spark hands the builder (a later value of a key wins)."""
+    return dict(_config_calls(monkeypatch))
 
 
 @pytest.mark.parametrize("env_heap", ["3g", None])
@@ -74,6 +88,28 @@ def test_driver_heap_is_fixed_and_not_pretouched(monkeypatch, env_heap):
     assert conf["spark.driver.memory"] == heap
     assert f"-Xms{heap}" in opts
     assert not any("AlwaysPreTouch" in o for o in opts)
+
+
+def test_page_size_is_1m_and_extra_conf_overrides_it(monkeypatch):
+    """get_spark sets a 1 MiB Tungsten page, and a caller's extra_conf is
+    applied after it, so the caller's value wins."""
+    calls = _config_calls(monkeypatch, extra_conf={"spark.buffer.pageSize": "8m"})
+    assert ("spark.buffer.pageSize", "1m") in calls
+    assert dict(calls)["spark.buffer.pageSize"] == "8m"
+
+
+def test_failed_shuffle_dir_probe_reports_on_stderr(monkeypatch, capsys):
+    def fail(path):
+        raise PermissionError(13, "planted probe failure", path)
+
+    monkeypatch.setattr(os.path, "isdir", lambda path: True)
+    monkeypatch.setattr(shutil, "disk_usage", fail)
+    assert session._shuffle_dir() == "/tmp"
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert captured.err.splitlines() == [
+        "covsar_spark: shuffle dir probe failed: PermissionError: [Errno 13] planted probe failure: '/dev/shm'"
+    ]
 
 
 def test_get_spark_runs_no_job(monkeypatch):
@@ -138,6 +174,39 @@ def test_pipeline_keeps_its_class_under_a_new_codegen_stage_id(spark):
     rows = other.unionAll(alone).collect()  # `alone` is now stage 2
     assert _codegen_compiles(spark) - before == 0
     assert len(rows) == 13
+
+
+def _broadcast_blocks(spark) -> set[str]:
+    """The broadcast value blocks (not their serialized ``piece`` blocks)
+    that the driver's block manager holds."""
+    entries = spark._jvm.org.apache.spark.SparkEnv.get().blockManager().blockInfoManager().entries()
+    names = set()
+    while entries.hasNext():
+        block = entries.next()._1()
+        if block.isBroadcast() and "piece" not in block.name():
+            names.add(block.name())
+    return names
+
+
+def test_tiny_broadcast_hash_join_pins_one_small_page(spark):
+    """A 10-row string-keyed broadcast hash relation (an UnsafeHashedRelation,
+    whose map starts with one Tungsten page) holds a 1 MiB page in the
+    driver's block store, not a page sized from the heap (32 MiB at 6.4g)."""
+    from pyspark.sql import functions as F
+
+    env = spark._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == 1 << 20
+    small = spark.createDataFrame([(f"k{i}", i) for i in range(10)], "k string, v long")
+    big = spark.range(100_000).selectExpr("concat('k', CAST(id % 20 AS STRING)) AS k", "id")
+    before = _broadcast_blocks(spark)
+    joined = big.join(F.broadcast(small), "k")  # held: its plan keeps the broadcast alive
+    assert len(joined.collect()) == 50_000
+    # sizes of the new blocks only: the ContextCleaner may be dropping old ones
+    BlockId = spark._jvm.org.apache.spark.storage.BlockId
+    store = env.blockManager().memoryStore()
+    new = {name: store.getSize(BlockId.apply(name)) for name in _broadcast_blocks(spark) - before}
+    assert new
+    assert max(new.values()) <= 2 << 20, new
 
 
 def _write_zip(path, modules):
